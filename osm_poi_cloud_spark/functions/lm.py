@@ -33,39 +33,37 @@ from pyspark.sql import functions as F
 
 PPM = 1_000_000
 
-# Co-partition the non-broadcast scoring joins on their shared key
-# subset (see score_bigram_lm / score_trigram_backoff). "auto" applies
-# it only when the planner's own size estimate says the count tables
-# will NOT be broadcast — in the broadcast regime the extra exchange of
-# the exploded table is pure overhead (measured +1.2 s at sf0.1), in
-# the too-big-to-broadcast regime it is the difference between one
-# exchange of the corpus-sized table and one per join. True/False force
-# either branch (A/B probes).
-_COPARTITION = "auto"
-
 
 def _would_broadcast(*dfs) -> bool:
     """True when every frame's optimizer-estimated size is under the
     session's autoBroadcastJoinThreshold — the same signal the planner
-    uses to pick the join strategy (driver-side estimate, no action)."""
-    spark = dfs[0].sparkSession
-    thr_s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    uses to pick the join strategy (driver-side estimate, no action).
+
+    The scorers co-partition their non-broadcast joins on a shared key
+    subset only when this is False: in the broadcast regime the extra
+    exchange of the exploded table is pure overhead (measured +1.2 s at
+    sf0.1), in the too-big-to-broadcast regime it is the difference
+    between one exchange of the corpus-sized table and one per join.
+
+    The estimate reads private handles (``_jdf``, ``spark._jvm``). Where
+    they are missing (e.g. Spark Connect) or raise, this answers True —
+    the plain-join branch, correct in either regime — so the heuristic
+    never fails the scorer."""
     try:
-        thr = int(thr_s)
-    except ValueError:
-        thr = int(spark._jvm.org.apache.spark.network.util.JavaUtils
-                  .byteStringAsBytes(thr_s))
-    if thr <= 0:
-        return False
-    return all(
-        int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        <= thr for d in dfs)
-
-
-def _copartition_wanted(*count_tables) -> bool:
-    if _COPARTITION == "auto":
-        return not _would_broadcast(*count_tables)
-    return bool(_COPARTITION)
+        spark = dfs[0].sparkSession
+        thr_s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+        try:
+            thr = int(thr_s)
+        except ValueError:
+            thr = int(spark._jvm.org.apache.spark.network.util.JavaUtils
+                      .byteStringAsBytes(thr_s))
+        if thr <= 0:
+            return False
+        return all(
+            int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            <= thr for d in dfs)
+    except Exception:
+        return True
 
 
 def _bigrams_df(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -128,7 +126,7 @@ def score_bigram_lm(df: DataFrame, bigram_counts: DataFrame,
     if broadcast_counts:
         bc = F.broadcast(bigram_counts)
         uc = F.broadcast(unigram_counts)
-    elif not _copartition_wanted(bigram_counts, unigram_counts):
+    elif _would_broadcast(bigram_counts, unigram_counts):
         bc, uc = bigram_counts, unigram_counts
     else:
         # co-partition every join on the shared key subset: hash
@@ -272,7 +270,7 @@ def score_trigram_backoff(df: DataFrame, trigram_counts: DataFrame,
                                    F.col("c1").alias("c2u")))
     uni3 = b(unigram_counts.select(F.col("prev").alias("w3"),
                                    F.col("c1").alias("c3u")))
-    if not broadcast_counts and _copartition_wanted(
+    if not broadcast_counts and not _would_broadcast(
             trigram_counts, bigram_counts, unigram_counts):
         # co-partition on w2: hash partitioning on the shared key
         # satisfies the clustering requirement of four of the five

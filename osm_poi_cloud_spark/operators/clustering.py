@@ -54,7 +54,7 @@ def dbscan(
     """Cluster ``points`` -> (id_col, cluster, role). ``cluster`` is
     the min core id of the density-connected component (-1 for noise),
     ``role`` in {'core','border','noise'}. Extra kwargs (e.g.
-    ``checkpoint_dir``, ``num_partitions``) pass through to
+    ``checkpoint_dir``, ``algorithm``) pass through to
     ``connected_components``."""
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import hashing as hx
+from .iterative import iterative_scope
 
 _M61 = (1 << 61) - 1
 
@@ -98,9 +99,7 @@ def make_minhash_udf(num_perm: int = 128, shingle_k: int = 5, seed: int = 7):
 def connected_components(edges: DataFrame, id_a: str = "a", id_b: str = "b",
                          max_iter: int = 20, strict: bool = False,
                          checkpoint_dir: str | None = None,
-                         algorithm: str = "star",
-                         num_partitions: int | None = None,
-                         rows_per_partition: int = 250_000) -> DataFrame:
+                         algorithm: str = "star") -> DataFrame:
     """Undirected edge list -> (node, component), component = min node id.
 
     ``algorithm``:
@@ -120,11 +119,8 @@ def connected_components(edges: DataFrame, id_a: str = "a", id_b: str = "b",
     Both produce the identical (node, component) mapping at fixpoint
     (min id per component), so golden fixtures are algorithm-agnostic.
 
-    ``checkpoint_dir``: when set, each round's state is written with a
-    *reliable* ``checkpoint()`` to that (HDFS/S3) directory, so executor
-    loss mid-job resumes from the last round instead of recomputing the
-    whole lineage; unset falls back to ``localCheckpoint`` (fine in
-    local mode / tests, NOT fault-tolerant on a cluster — r1 verdict #3).
+    ``checkpoint_dir`` and the edge-count shuffle width: see
+    ``operators/iterative.py``.
 
     Per round there is exactly one *compute* action (the eager
     checkpoint); the convergence probe then reads already-checkpointed
@@ -134,63 +130,19 @@ def connected_components(edges: DataFrame, id_a: str = "a", id_b: str = "b",
     emits a loud warning — a silently split cluster would leak
     near-duplicates downstream.
 
-    Per-round shuffle width is derived from the edge count
-    (``ceil(n_edges / rows_per_partition)``, override with
-    ``num_partitions``) instead of inheriting the session's
-    ``spark.sql.shuffle.partitions`` — iterative rounds over small or
-    rapidly-contracting graphs otherwise pay default-width task
-    scheduling for near-empty partitions (r4 verdict; same fix as
-    operators/graph.py pagerank). Session conf restored on exit; the
-    (node, component) output is exact integers, so the result is
+    The (node, component) output is exact integers, so the result is
     partitioning-independent."""
     if algorithm not in ("star", "label-prop"):
         raise ValueError(f"algorithm must be 'star' or 'label-prop', got {algorithm!r}")
-    edges = edges.persist()  # re-read every iteration; never recompute upstream LSH
-    spark = edges.sparkSession
-    spark_ctx = spark.sparkContext
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        # unique per-run subdirectory: (a) later .checkpoint() calls in
-        # the session don't silently land in this operator's directory
-        # (the original dir — or unset state — is restored below),
-        # (b) the caller can delete ONE subdir after consuming the
-        # result — per-round checkpoint files accumulate within a run
-        # (bounded by max_iter) because the returned labels still
-        # reference the final round's files.
-        import uuid
-
-        prev_opt = spark_ctx._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = prev_opt.get() if prev_opt.isDefined() else None
-        run_dir = f"{checkpoint_dir.rstrip('/')}/cc-{uuid.uuid4().hex}"
-        spark_ctx.setCheckpointDir(run_dir)
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir is not None else df.localCheckpoint(eager=True)
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if num_partitions is None:
-            import math
-
-            num_partitions = max(1, math.ceil(edges.count() / rows_per_partition))
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-        if algorithm == "star":
-            labels, converged = _cc_star(edges, id_a, id_b, max_iter, _checkpoint)
-        else:
-            labels, converged = _cc_label_prop(edges, id_a, id_b, max_iter, _checkpoint)
+    cc = _cc_star if algorithm == "star" else _cc_label_prop
+    with iterative_scope(edges.sparkSession, checkpoint_dir, tag="cc") as it:
+        edges = it.persist(edges)  # re-read every iteration; never recompute upstream LSH
+        it.size_shuffles(edges.count())
+        labels, converged = cc(edges, id_a, id_b, max_iter, it.checkpoint)
         # the final label mapping is still lazy (one join over the last
         # checkpoint) — materialize it before the conf is restored so
         # every shuffle this operator owns runs at the derived width
-        labels = _checkpoint(labels)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        edges.unpersist()
-        if checkpoint_dir is not None:
-            # restore EXACTLY the prior state: Scala setCheckpointDir
-            # wraps its argument in Option(...), so null clears it —
-            # leaving the session pointed at the deletable cc-<uuid>
-            # subdir would corrupt later unrelated .checkpoint() calls.
-            spark_ctx._jsc.sc().setCheckpointDir(prev_ckpt_dir)
+        labels = it.checkpoint(labels)
     if not converged:
         msg = (f"connected_components did not converge within max_iter={max_iter}; "
                "components may be split — raise max_iter")

@@ -31,72 +31,43 @@ rounds, so AQE reuses the layout.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .iterative import iterative_scope
 
 
 def pagerank(edges: DataFrame, iters: int = 20, damping: float = 0.85,
              src_col: str = "src", dst_col: str = "dst",
-             checkpoint_dir: str | None = None,
-             num_partitions: int | None = None,
-             rows_per_partition: int = 250_000) -> DataFrame:
+             checkpoint_dir: str | None = None) -> DataFrame:
     """(src, dst) directed edge list -> (node, rank), ranks summing to 1.
 
     ``iters`` fixed-count power iterations (deterministic output for a
     given input — no tolerance-based early exit, so goldens replay).
-    ``checkpoint_dir`` as in ``connected_components``: set on a cluster
-    for reliable per-round checkpoints (resume after executor loss);
-    unset uses ``localCheckpoint``.
-
-    Shuffle partitioning is derived from the EDGE COUNT instead of
-    inheriting ``spark.sql.shuffle.partitions`` (r4 verdict: 5 setup
-    stages x 128 partitions over a 75k-edge graph was ~14 s of pure
-    task-scheduling overhead — and on a real cluster the early rounds
-    of any pruned subgraph hit the same effect, while a 10^10-edge
-    graph needs MORE than the session default). Every per-round shuffle
-    runs at ``ceil(n_edges / rows_per_partition)`` partitions (override
-    with ``num_partitions``); the session conf is restored on exit.
+    ``checkpoint_dir`` and the edge-count shuffle width: see
+    ``operators/iterative.py``.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
 
-    spark = edges.sparkSession
-    spark_ctx = spark.sparkContext
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        prev_opt = spark_ctx._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = prev_opt.get() if prev_opt.isDefined() else None
-        spark_ctx.setCheckpointDir(
-            f"{checkpoint_dir.rstrip('/')}/pr-{uuid.uuid4().hex}")
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if checkpoint_dir is not None
-                else df.localCheckpoint(eager=True))
-
-    e_raw = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-             .persist())
-    e = nodes = e_deg = dangling_nodes = None
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with iterative_scope(edges.sparkSession, checkpoint_dir, tag="pr") as it:
+        e_raw = it.persist(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()))
         # size every shuffle this operator owns — including the edge
         # distinct() — from a map-only count of the raw edges (no
-        # shuffle happens before the conf is set): tiny graphs stop
+        # shuffle happens before the width is set): tiny graphs stop
         # paying default-width scheduling, huge graphs get more width
         # than the session default
-        if num_partitions is None:
-            import math
-
-            num_partitions = max(1, math.ceil(e_raw.count() / rows_per_partition))
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-        e = e_raw.distinct().persist()
-        nodes = (e.select(F.col("src").alias("node"))
-                 .union(e.select(F.col("dst").alias("node")))
-                 .distinct().persist())
+        it.size_shuffles(e_raw.count())
+        e = it.persist(e_raw.distinct())
+        nodes = it.persist(e.select(F.col("src").alias("node"))
+                           .union(e.select(F.col("dst").alias("node")))
+                           .distinct())
         n = nodes.count()
         if n == 0:
             return nodes.withColumn("rank", F.lit(0.0))
@@ -104,14 +75,12 @@ def pagerank(edges: DataFrame, iters: int = 20, damping: float = 0.85,
         # loop-invariant hoists: the degree-annotated edge list and the
         # dangling-node set never change across iterations — join them
         # ONCE, not once per round
-        e_deg = e.join(out_deg, "src") \
-            .select("src", "dst", "deg").persist()
-        dangling_nodes = (
+        e_deg = it.persist(e.join(out_deg, "src").select("src", "dst", "deg"))
+        dangling_nodes = it.persist(
             nodes.join(out_deg, nodes["node"] == out_deg["src"], "left_anti")
-            .select("node").persist()
-        )
+            .select("node"))
 
-        ranks = _checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
+        ranks = it.checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
         base = (1.0 - damping) / n
         for _ in range(iters):
             # mass sitting on dangling nodes this round: a ONE-ROW
@@ -138,24 +107,12 @@ def pagerank(edges: DataFrame, iters: int = 20, damping: float = 0.85,
                                          + F.col("dangling") / n)).alias("rank"),
                 )
             )
-            ranks = _checkpoint(new_ranks)
+            ranks = it.checkpoint(new_ranks)
         return ranks
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        e_raw.unpersist()
-        for cached in (e, nodes, e_deg, dangling_nodes):
-            if cached is not None:
-                cached.unpersist()
-        if checkpoint_dir is not None:
-            # Scala setCheckpointDir wraps in Option(...): null clears
-            # (same restore contract as connected_components)
-            spark_ctx._jsc.sc().setCheckpointDir(prev_ckpt_dir)
 
 
 def hits(edges: DataFrame, iters: int = 20, src_col: str = "src",
-         dst_col: str = "dst", checkpoint_dir: str | None = None,
-         num_partitions: int | None = None,
-         rows_per_partition: int = 250_000) -> DataFrame:
+         dst_col: str = "dst", checkpoint_dir: str | None = None) -> DataFrame:
     """HITS hubs & authorities (Kleinberg, JACM 1999) — PageRank's
     sibling link-analysis pass: a page is a good AUTHORITY when good
     hubs link to it, a good HUB when it links to good authorities.
@@ -174,56 +131,32 @@ def hits(edges: DataFrame, iters: int = 20, src_col: str = "src",
     Parallel edges collapse; isolated directions score 0.
 
     Same scaffolding contract as ``pagerank``: one eager checkpoint
-    per round (reliable-dir resume option), shuffle width derived from
-    the edge count via a map-only pre-count, norms as ONE-ROW
+    per round, shuffle width derived from the edge count via a map-only
+    pre-count (both: ``operators/iterative.py``), norms as ONE-ROW
     broadcast aggregates (zero per-round driver actions), loop state
     a single (node, hub, authority) table so each round checkpoints
     once."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
 
-    spark = edges.sparkSession
-    spark_ctx = spark.sparkContext
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        prev_opt = spark_ctx._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = prev_opt.get() if prev_opt.isDefined() else None
-        spark_ctx.setCheckpointDir(
-            f"{checkpoint_dir.rstrip('/')}/hits-{uuid.uuid4().hex}")
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if checkpoint_dir is not None
-                else df.localCheckpoint(eager=True))
-
-    e_raw = (edges.select(F.col(src_col).alias("src"),
-                          F.col(dst_col).alias("dst"))
-             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-             .persist())
-    e = nodes = None
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if num_partitions is None:
-            import math
-
-            num_partitions = max(
-                1, math.ceil(e_raw.count() / rows_per_partition))
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-        e = e_raw.distinct().persist()
-        nodes = (e.select(F.col("src").alias("node"))
-                 .union(e.select(F.col("dst").alias("node")))
-                 .distinct().persist())
+    with iterative_scope(edges.sparkSession, checkpoint_dir, tag="hits") as it:
+        e_raw = it.persist(
+            edges.select(F.col(src_col).alias("src"),
+                         F.col(dst_col).alias("dst"))
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()))
+        it.size_shuffles(e_raw.count())
+        e = it.persist(e_raw.distinct())
+        nodes = it.persist(e.select(F.col("src").alias("node"))
+                           .union(e.select(F.col("dst").alias("node")))
+                           .distinct())
         n = nodes.count()
         if n == 0:
             return (nodes.withColumn("hub", F.lit(0.0))
                     .withColumn("authority", F.lit(0.0)))
 
-        import math as _m
-
-        state = _checkpoint(
-            nodes.withColumn("hub", F.lit(1.0 / _m.sqrt(n)))
-            .withColumn("authority", F.lit(1.0 / _m.sqrt(n))))
+        state = it.checkpoint(
+            nodes.withColumn("hub", F.lit(1.0 / math.sqrt(n)))
+            .withColumn("authority", F.lit(1.0 / math.sqrt(n))))
 
         def _normalized(scores: DataFrame, col: str) -> DataFrame:
             norm = scores.agg(
@@ -246,7 +179,7 @@ def hits(edges: DataFrame, iters: int = 20, src_col: str = "src",
             # auth subtree otherwise evaluates twice per round (once
             # inside hub_in, once as the state join's right side) —
             # materialization only, results identical
-            auth = _checkpoint(_normalized(
+            auth = it.checkpoint(_normalized(
                 nodes.join(auth_in, "node", "left")
                 .select("node", F.coalesce("authority", F.lit(0.0))
                         .alias("authority")),
@@ -261,24 +194,14 @@ def hits(edges: DataFrame, iters: int = 20, src_col: str = "src",
                 nodes.join(hub_in, "node", "left")
                 .select("node", F.coalesce("hub", F.lit(0.0)).alias("hub")),
                 "hub")
-            state = _checkpoint(hub.join(auth, "node"))
+            state = it.checkpoint(hub.join(auth, "node"))
         return state.select("node", "hub", "authority")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        e_raw.unpersist()
-        for cached in (e, nodes):
-            if cached is not None:
-                cached.unpersist()
-        if checkpoint_dir is not None:
-            spark_ctx._jsc.sc().setCheckpointDir(prev_ckpt_dir)
 
 
 def label_communities(edges: DataFrame, iters: int = 10,
                       src_col: str = "src", dst_col: str = "dst",
                       weight_col: str | None = None,
-                      checkpoint_dir: str | None = None,
-                      num_partitions: int | None = None,
-                      rows_per_partition: int = 250_000) -> DataFrame:
+                      checkpoint_dir: str | None = None) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) over an UNDIRECTED graph — the third link-graph signal
     next to PageRank/HITS: curation consumers (mixture planner,
@@ -307,57 +230,34 @@ def label_communities(edges: DataFrame, iters: int = 10,
     Scale shape per round: one join of the adjacency against the
     current labels (shuffle on the neighbor key), one
     groupBy(node, label) partial-agg weight sum, one groupBy(node)
-    argmax — all at a width derived from the edge count (map-only
-    pre-count, session conf restored on exit), one eager checkpoint so
-    lineage never chains across rounds (``checkpoint_dir`` for
-    reliable cluster resume, as in ``connected_components``). Zero
-    per-round driver actions.
+    argmax — all at a width derived from the edge count, one eager
+    checkpoint so lineage never chains across rounds (both, and
+    ``checkpoint_dir``: ``operators/iterative.py``). Zero per-round
+    driver actions.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
 
-    spark = edges.sparkSession
-    spark_ctx = spark.sparkContext
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        prev_opt = spark_ctx._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = prev_opt.get() if prev_opt.isDefined() else None
-        spark_ctx.setCheckpointDir(
-            f"{checkpoint_dir.rstrip('/')}/lpa-{uuid.uuid4().hex}")
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if checkpoint_dir is not None
-                else df.localCheckpoint(eager=True))
-
     w = (F.col(weight_col).cast("double") if weight_col is not None
          else F.lit(1.0))
-    e_raw = (edges.select(F.col(src_col).alias("a"),
-                          F.col(dst_col).alias("b"), w.alias("w"))
-             .filter(F.col("a").isNotNull() & F.col("b").isNotNull()
-                     & (F.col("a") != F.col("b")))
-             .persist())
-    adj = nodes = None
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if num_partitions is None:
-            import math
-
-            num_partitions = max(
-                1, math.ceil(e_raw.count() / rows_per_partition))
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
+    with iterative_scope(edges.sparkSession, checkpoint_dir, tag="lpa") as it:
+        e_raw = it.persist(
+            edges.select(F.col(src_col).alias("a"),
+                         F.col(dst_col).alias("b"), w.alias("w"))
+            .filter(F.col("a").isNotNull() & F.col("b").isNotNull()
+                    & (F.col("a") != F.col("b"))))
+        it.size_shuffles(e_raw.count())
         sym = e_raw.union(
             e_raw.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
         if weight_col is None:
             # parallel/reverse duplicates count ONCE per undirected pair
-            adj = (sym.select("a", "b").distinct()
-                   .withColumn("w", F.lit(1.0)).persist())
+            adj = it.persist(sym.select("a", "b").distinct()
+                             .withColumn("w", F.lit(1.0)))
         else:
-            adj = sym.groupBy("a", "b").agg(F.sum("w").alias("w")).persist()
-        nodes = adj.select(F.col("a").alias("node")).distinct().persist()
+            adj = it.persist(sym.groupBy("a", "b").agg(F.sum("w").alias("w")))
+        nodes = it.persist(adj.select(F.col("a").alias("node")).distinct())
 
-        labels = _checkpoint(nodes.withColumn("label", F.col("node")))
+        labels = it.checkpoint(nodes.withColumn("label", F.col("node")))
         for _ in range(iters):
             votes = (
                 adj.join(labels.select(F.col("node").alias("a"), "label"),
@@ -369,16 +269,8 @@ def label_communities(edges: DataFrame, iters: int = 10,
                 F.min(F.struct((-F.col("wt")).alias("nw"),
                                F.col("label").alias("l")))["l"]
                 .alias("_new"))
-            labels = _checkpoint(
+            labels = it.checkpoint(
                 labels.join(upd, "node", "left")
                 .select("node",
                         F.coalesce("_new", "label").alias("label")))
         return labels.select("node", F.col("label").alias("community"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        e_raw.unpersist()
-        for cached in (adj, nodes):
-            if cached is not None:
-                cached.unpersist()
-        if checkpoint_dir is not None:
-            spark_ctx._jsc.sc().setCheckpointDir(prev_ckpt_dir)

@@ -178,14 +178,14 @@ def mann_kendall_trends(cells_ts: DataFrame,
         S        = sum over i<j of sign(v_j - v_i)
         var_num  = n(n-1)(2n+5) - sum over tie groups t(t-1)(2t+5)
                    (= 18 * Var(S), exact integer, tie-corrected)
-        trend    = increasing  if S > 0 and (S-1)^2 * 45000 > 2401 * var_num
-                   decreasing  if S < 0 and (S+1)^2 * 45000 > 2401 * var_num
+        trend    = increasing  if S > 0 and (S-1)^2 * 11250 > 2401 * var_num
+                   decreasing  if S < 0 and (S+1)^2 * 11250 > 2401 * var_num
                    none        otherwise
 
     The classification is the two-sided alpha=0.05 normal test
     |z| > 1.96 with z = (S -+ 1)/sqrt(var_num/18), rearranged so every
     comparison is EXACT INTEGER arithmetic (1.96^2 = 2401/625 and the
-    18 fold into the 45000/2401 pair) — no sqrt, no float, so the
+    18 fold into the 11250/2401 pair) — no sqrt, no float, so the
     whole row is hash-stable across engines.
 
     Plan: one groupBy on the cell key collecting the (period, value)
@@ -242,10 +242,10 @@ def mann_kendall_trends(cells_ts: DataFrame,
            .withColumn("var_num", var_num)
            .drop("_vs"))
     inc = (F.col("s_stat") > 0) & (
-        (F.col("s_stat") - 1) * (F.col("s_stat") - 1) * 45000
+        (F.col("s_stat") - 1) * (F.col("s_stat") - 1) * 11250
         > 2401 * F.col("var_num"))
     dec = (F.col("s_stat") < 0) & (
-        (F.col("s_stat") + 1) * (F.col("s_stat") + 1) * 45000
+        (F.col("s_stat") + 1) * (F.col("s_stat") + 1) * 11250
         > 2401 * F.col("var_num"))
     return out.withColumn(
         "trend",

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import tile_math as tm
+from .iterative import iterative_scope
 
 EARTH_RADIUS_M = 6_371_000.0
 
@@ -104,8 +105,6 @@ def nearest_join(
     left_id: str = "query_id",
     right_id: str = "poi_id",
     max_rounds: int = 64,
-    num_partitions: int | None = None,
-    rows_per_partition: int = 250_000,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT nearest-neighbor join: for every left point, THE single
@@ -128,17 +127,14 @@ def nearest_join(
     At scale: per-round cost is one shuffle hash join on the cell key
     over the SHRINKING pending set (dense areas resolve in round 0 at
     3x3-candidate cost; only sparse-region stragglers escalate), never
-    an all-pairs product. Shuffle width is derived from the input
-    sizes (``rows_per_partition``) like the other iterative operators,
-    with the session conf restored on exit. ``pending`` and each
-    round's matches are EAGERLY CHECKPOINTED — pending's anti-join
-    chain otherwise doubles the logical plan every round and Catalyst
-    re-optimization time grows exponentially (measured: 68 s for round
-    6 of a 400-point toy under plain persist). ``checkpoint_dir`` as
-    in ``connected_components``: set for reliable cluster checkpoints,
-    unset uses ``localCheckpoint``. Per-round driver actions: the two
-    eager checkpoints plus one emptiness probe, all bounded by
-    ``max_rounds``.
+    an all-pairs product. ``pending`` and each round's matches are
+    EAGERLY CHECKPOINTED — pending's anti-join chain otherwise doubles
+    the logical plan every round and Catalyst re-optimization time
+    grows exponentially (measured: 68 s for round 6 of a 400-point toy
+    under plain persist). Per-round driver actions: the two eager
+    checkpoints plus one emptiness probe, all bounded by
+    ``max_rounds``. ``checkpoint_dir`` and the input-size shuffle
+    width: see ``operators/iterative.py``.
 
     Output: ``left_id, right_id, nn_d2`` (squared distance — exact
     integer when the coordinates are integers). Inner semantics: empty
@@ -146,35 +142,13 @@ def nearest_join(
     """
     if cell0 <= 0:
         raise ValueError(f"cell0 must be positive, got {cell0}")
-    spark = left.sparkSession
-    spark_ctx = spark.sparkContext
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        prev_opt = spark_ctx._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = prev_opt.get() if prev_opt.isDefined() else None
-        spark_ctx.setCheckpointDir(
-            f"{checkpoint_dir.rstrip('/')}/nn-{uuid.uuid4().hex}")
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if checkpoint_dir is not None
-                else df.localCheckpoint(eager=True))
-
-    rt_raw = right.select(
-        F.col(right_id), F.col(x_col).alias("_rx"), F.col(y_col).alias("_ry")
-    ).persist()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with iterative_scope(left.sparkSession, checkpoint_dir, tag="nn") as it:
+        rt_raw = it.persist(right.select(
+            F.col(right_id), F.col(x_col).alias("_rx"), F.col(y_col).alias("_ry")))
         n_right = rt_raw.count()  # also materializes the persist
-        pending = _checkpoint(left.select(
+        pending = it.checkpoint(left.select(
             F.col(left_id), F.col(x_col).alias("_lx"), F.col(y_col).alias("_ly")))
-        if num_partitions is None:
-            import math
-
-            num_partitions = max(
-                1, math.ceil((pending.count() + n_right) / rows_per_partition))
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
+        it.size_shuffles(pending.count() + n_right)
         if n_right == 0:
             return (pending.limit(0)
                     .join(rt_raw.select(right_id), F.lit(False), "inner")
@@ -209,13 +183,13 @@ def nearest_join(
                 .agg(F.min(F.struct(F.col("_d2").alias("d2"),
                                     F.col(right_id).alias("rid"))).alias("_b"))
             )
-            matched = _checkpoint(
+            matched = it.checkpoint(
                 best.filter(F.col("_b.d2") <= F.lit(s * s))
                 .select(left_id, F.col("_b.rid").alias(right_id),
                         F.col("_b.d2").alias("nn_d2"))
             )
             chunks.append(matched)
-            pending = _checkpoint(
+            pending = it.checkpoint(
                 pending.join(matched, left_id, "left_anti"))
             s *= 2.0
         if not pending.isEmpty():
@@ -230,13 +204,6 @@ def nearest_join(
         for c in chunks[1:]:
             out = out.unionByName(c)
         return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        rt_raw.unpersist()
-        if checkpoint_dir is not None:
-            # Scala setCheckpointDir wraps in Option(...): null clears
-            # (same restore contract as connected_components)
-            spark_ctx._jsc.sc().setCheckpointDir(prev_ckpt_dir)
 
 
 def radius_join(left: DataFrame, right: DataFrame, radius_deg: float,

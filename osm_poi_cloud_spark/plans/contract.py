@@ -666,10 +666,10 @@ _Q_EMERGING_HOTSPOTS_ORACLE = (
     "SELECT n.cell, n.n_periods, s.s_stat, "
     "CAST(n.n_periods * (n.n_periods - 1) * (2 * n.n_periods + 5) "
     "- ties.tt AS BIGINT) AS var_num, "
-    "CASE WHEN s.s_stat > 0 AND (s.s_stat - 1) * (s.s_stat - 1) * 45000 "
+    "CASE WHEN s.s_stat > 0 AND (s.s_stat - 1) * (s.s_stat - 1) * 11250 "
     "> 2401 * (n.n_periods * (n.n_periods - 1) * (2 * n.n_periods + 5) - ties.tt) "
     "THEN 'increasing' "
-    "WHEN s.s_stat < 0 AND (s.s_stat + 1) * (s.s_stat + 1) * 45000 "
+    "WHEN s.s_stat < 0 AND (s.s_stat + 1) * (s.s_stat + 1) * 11250 "
     "> 2401 * (n.n_periods * (n.n_periods - 1) * (2 * n.n_periods + 5) - ties.tt) "
     "THEN 'decreasing' ELSE 'none' END AS trend "
     "FROM n JOIN s ON s.cell = n.cell JOIN ties ON ties.cell = n.cell "

@@ -36,6 +36,7 @@ from __future__ import annotations
 import gzip
 import json
 import struct
+import zlib
 from bisect import bisect_right
 from collections import OrderedDict
 
@@ -43,6 +44,16 @@ from ..operators.mvt import hilbert_tile_id
 
 _HEADER_LEN = 127
 _PREFETCH = 16384  # spec: header + root directory live in the first 16 KiB
+
+
+def _gunzip(raw: bytes) -> bytes:
+    """gzip-decompress untrusted archive bytes. A truncated or corrupt
+    stream raises ``ValueError`` — the reader's one refusal type —
+    instead of ``EOFError`` / ``zlib.error`` / ``BadGzipFile``."""
+    try:
+        return gzip.decompress(raw)
+    except (EOFError, zlib.error, gzip.BadGzipFile) as e:
+        raise ValueError(f"corrupt gzip data in PMTiles archive: {e}") from e
 
 
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
@@ -110,7 +121,7 @@ class PMTilesReader:
         self._max_leaf_cache = max_leaf_cache
 
         head = self._fh.read(_PREFETCH)
-        if head[:8] != b"PMTiles\x03":
+        if head[:8] != b"PMTiles\x03" or len(head) < _HEADER_LEN:
             raise ValueError(f"{path}: not a PMTiles v3 archive")
         (self._root_off, self._root_len, self._meta_off, self._meta_len,
          self._leaf_off, self._leaf_len, self._data_off, self._data_len,
@@ -130,10 +141,13 @@ class PMTilesReader:
     def _read(self, off: int, ln: int) -> bytes:
         with self._lock:
             self._fh.seek(off)
-            return self._fh.read(ln)
+            buf = self._fh.read(ln)
+        if len(buf) != ln:  # truncated archive: never hand out a short read
+            raise ValueError(f"{self.path}: short read at offset {off}")
+        return buf
 
     def _inflate(self, raw: bytes) -> bytes:
-        return gzip.decompress(raw) if self._internal_comp == 2 else raw
+        return _gunzip(raw) if self._internal_comp == 2 else raw
 
     # -- directory walk ---------------------------------------------------
     def _leaf(self, off: int, ln: int):
@@ -178,7 +192,7 @@ class PMTilesReader:
             if e is None or e[3] == 0 or tid >= e[0] + e[3]:
                 return None
             raw = self._read(self._data_off + e[1], e[2])
-            return gzip.decompress(raw) if self._tile_comp == 2 else raw
+            return _gunzip(raw) if self._tile_comp == 2 else raw
         except (ValueError, OSError):
             # malformed leaf directory / corrupt compressed payload in
             # an untrusted archive: unaddressed-tile semantics (the

@@ -74,19 +74,13 @@ def test_star_graph_authority(spark):
     assert got.loc[0] > leaves.max() * 10
 
 
-def test_validation_and_checkpoint_restore(spark, tmp_path):
+def test_pagerank_validation(spark):
+    # the checkpoint-dir restore contract: tests/test_iterative.py
     df = spark.createDataFrame(pd.DataFrame([(0, 1)], columns=["src", "dst"]))
     with pytest.raises(ValueError):
         pagerank(df, iters=0)
     with pytest.raises(ValueError):
         pagerank(df, damping=1.0)
-    # reliable-checkpoint route runs and restores the (unset) dir
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getCheckpointDir()
-    out = pagerank(df, iters=3, checkpoint_dir=str(tmp_path)).toPandas()
-    after = sc._jsc.sc().getCheckpointDir()
-    assert len(out) == 2
-    assert before.isDefined() == after.isDefined()
 
 
 # --- HITS hubs & authorities ---
@@ -286,21 +280,3 @@ def test_lpa_self_loops_and_nulls_dropped(spark):
     odd = label_communities(df, iters=3).toPandas() \
         .set_index("node")["community"].to_dict()
     assert odd == {0: 1, 1: 0}
-
-
-def test_lpa_checkpoint_dir_restore(spark, tmp_path):
-    from osm_poi_cloud_spark.operators.graph import label_communities
-
-    sc = spark.sparkContext
-    prev = sc._jsc.sc().getCheckpointDir()
-    prev = prev.get() if prev.isDefined() else None
-    df = spark.createDataFrame(
-        pd.DataFrame([(0, 1), (1, 2)], columns=["src", "dst"]))
-    out = label_communities(df, iters=4,
-                            checkpoint_dir=str(tmp_path)).toPandas()
-    # the point here is the checkpoint-dir restore contract, not the
-    # dynamics; just require a full, valid labelling
-    assert len(out) == 3 and set(out["community"]) <= {0, 1, 2}
-    now = sc._jsc.sc().getCheckpointDir()
-    now = now.get() if now.isDefined() else None
-    assert now == prev

@@ -158,13 +158,19 @@ def _py_mk(values):
     from collections import Counter
     ties = sum(t * (t - 1) * (2 * t + 5) for t in Counter(values).values())
     var_num = n * (n - 1) * (2 * n + 5) - ties
-    if s > 0 and (s - 1) ** 2 * 45000 > 2401 * var_num:
+    if s > 0 and (s - 1) ** 2 * 11250 > 2401 * var_num:
         trend = "increasing"
-    elif s < 0 and (s + 1) ** 2 * 45000 > 2401 * var_num:
+    elif s < 0 and (s + 1) ** 2 * 11250 > 2401 * var_num:
         trend = "decreasing"
     else:
         trend = "none"
     return s, var_num, trend
+
+
+def _float_z(s, var_num):
+    if s == 0 or var_num == 0:
+        return 0.0
+    return (s - 1 if s > 0 else s + 1) / math.sqrt(var_num / 18)
 
 
 def test_mann_kendall_hand_and_planted(spark):
@@ -179,15 +185,25 @@ def test_mann_kendall_hand_and_planted(spark):
     rows += [(4, p, p) for p in range(3)]
     # cell 5: alternating -> no significant trend
     rows += [(5, p, 5 + (p % 2)) for p in range(12)]
+    # cells 6/7: 4-period monotone runs, |z| = 1.70 (p = 0.089) -> not
+    # significant at alpha = 0.05
+    rows += [(6, p, p) for p in range(4)]
+    rows += [(7, p, 3 - p) for p in range(4)]
+    # cell 8: 5-period monotone run, z = 2.20 (p = 0.027) -> significant
+    rows += [(8, p, p) for p in range(5)]
+    # cell 9: rise, dip, rise over 12 periods, z = 1.80 -> not significant
+    rows += [(9, p, v) for p, v in enumerate([1, 2, 3, 4, 5, 6, 7, 3, 2, 1, 8, 9])]
     df = spark.createDataFrame(rows, "cell long, period long, v long")
     got = {r["cell"]: r for r in hs.mann_kendall_trends(
         df, cell_cols=("cell",)).collect()}
-    assert set(got) == {1, 2, 3, 5}
+    assert set(got) == {1, 2, 3, 5, 6, 7, 8, 9}
     assert got[1]["s_stat"] == 66 and got[1]["trend"] == "increasing"
     assert got[2]["s_stat"] == -66 and got[2]["trend"] == "decreasing"
     assert got[3]["s_stat"] == 0 and got[3]["var_num"] == 0
     assert got[3]["trend"] == "none"
     assert got[5]["trend"] == "none"
+    assert got[6]["trend"] == got[7]["trend"] == got[9]["trend"] == "none"
+    assert got[8]["trend"] == "increasing"
     # every row matches the independent recompute (incl. tie correction)
     series = {}
     for c, p, v in rows:
@@ -196,6 +212,13 @@ def test_mann_kendall_hand_and_planted(spark):
         vals = [v for _, v in sorted(series[c])]
         s, var_num, trend = _py_mk(vals)
         assert (r["s_stat"], r["var_num"], r["trend"]) == (s, var_num, trend), c
+        # textbook two-sided float z-test with continuity correction
+        z = _float_z(s, var_num)
+        sig = math.erfc(abs(z) / math.sqrt(2)) < 0.05
+        assert r["trend"] == (("increasing" if z > 0 else "decreasing")
+                              if sig else "none"), c
+        if c in (6, 7, 9):  # significant under the old alpha ~0.33 constant
+            assert 0.98 < abs(z) < 1.96, (c, z)
 
     import pytest
     with pytest.raises(ValueError):

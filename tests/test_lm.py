@@ -162,3 +162,25 @@ def test_trigram_python_recompute_and_validation(spark):
         LM.score_trigram_backoff(docs, tc, bc, uc, 0)
     with pytest.raises(ValueError):
         LM.score_trigram_backoff(docs, tc, bc, uc, n, alpha_ppm=0)
+
+
+def test_would_broadcast_falls_back_without_private_api(spark):
+    """The co-partition heuristic reads the optimizer estimate through
+    ``_jdf`` / ``spark._jvm``; frames without them (Spark Connect shape)
+    get the plain-join answer instead of an error."""
+    class _NoJdf:
+        sparkSession = spark
+
+    class _NoJvmSession:
+        class conf:
+            @staticmethod
+            def get(key, default=None):
+                return "10MB"
+
+    class _NoJvmFrame:
+        sparkSession = _NoJvmSession()
+
+    assert LM._would_broadcast(_NoJdf()) is True
+    assert LM._would_broadcast(_NoJvmFrame()) is True
+    small = spark.createDataFrame(pd.DataFrame({"prev": ["a"], "c1": [1]}))
+    assert LM._would_broadcast(small) is True

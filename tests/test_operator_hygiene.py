@@ -3,12 +3,14 @@
 * no driver-side actions hiding inside non-planner operators
 * compact() sizes output from file metadata, not a scan
 * connected_components supports reliable checkpointing
+* only operators/iterative.py touches the checkpoint dir / shuffle width
 * LSH/IVF determinism without driver probes
 """
 
 import ast
 import os
 import pathlib
+import re
 
 import numpy as np
 import pandas as pd
@@ -75,6 +77,26 @@ def test_no_driver_actions_in_operators():
             if (rel, fn) not in ALLOWED_ACTIONS:
                 offenders.append(f"{rel}:{line} in {fn}()")
     assert not offenders, f"driver actions outside planner allowlist: {offenders}"
+
+
+# The checkpoint dir and the shuffle width are session state: only the
+# iterative scope may change them, because it restores both on exit.
+SESSION_STATE_CALL = re.compile(
+    r"setCheckpointDir|getCheckpointDir"
+    r"|conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions")
+
+
+def test_session_state_only_in_iterative_scope():
+    scope = PKG / "operators" / "iterative.py"
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == scope:
+            continue
+        src = path.read_text()
+        for m in SESSION_STATE_CALL.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            offenders.append(f"{path.relative_to(PKG)}:{line}: {m.group(0)}")
+    assert not offenders, f"use operators/iterative.iterative_scope: {offenders}"
 
 
 def test_source_bytes_is_metadata_only(spark, tmp_path):

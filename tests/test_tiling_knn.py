@@ -223,16 +223,6 @@ def test_nearest_join_tie_break_and_empty_right(spark):
     assert out.count() == 0 and set(out.columns) == {"qid", "rid", "nn_d2"}
 
 
-def test_nearest_join_restores_shuffle_conf(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    lp = pd.DataFrame({"qid": [0, 1], "x": [0, 100], "y": [0, 100]})
-    rp = pd.DataFrame({"rid": [0], "x": [50], "y": [50]})
-    knn.nearest_join(spark.createDataFrame(lp), spark.createDataFrame(rp),
-                     cell0=10.0, x_col="x", y_col="y",
-                     left_id="qid", right_id="rid").count()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-
 # --- raster heat-map tile rendering ---
 
 def test_heatmap_tiles_scalar_parity(spark):
