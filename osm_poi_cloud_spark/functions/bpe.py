@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .text_analysis import words_col
+
 #: end-of-word marker (GPT-2 uses a leading space convention; the
 #: classic Sennrich formulation uses a terminal marker — simpler to
 #: reason about and to recompute independently)
@@ -51,8 +53,7 @@ def word_counts(df: DataFrame, text_col: str = "text",
     early merges unchanged (asserted in tests) while bounding the
     driver table to the true high-frequency vocabulary."""
     wc = (
-        df.select(F.explode(F.split(F.lower(F.trim(F.col(text_col))), "\\s+")).alias("word"))
-        .filter(F.col("word") != "")
+        df.select(F.explode(words_col(F.lower(F.col(text_col)))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text_analysis import words_col
+
 #: bucket-hash seed — shared with the golden recompute
 HASH_SEED = 42
 
@@ -43,8 +45,7 @@ def hashed_token_buckets(df: DataFrame, dim: int = 256,
         raise ValueError(f"dim must be >= 2, got {dim}")
     toks = df.select(
         F.col(id_col),
-        F.explode(F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                           lambda t: t != "")).alias("tok"))
+        F.explode(words_col(F.lower(F.col(text_col)))).alias("tok"))
     return (
         toks.select(
             id_col,

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .text_analysis import words_col
+
 PPM = 1_000_000
 
 
@@ -69,8 +71,7 @@ def _would_broadcast(*dfs) -> bool:
 def _bigrams_df(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, pos, prev, w) — consecutive lowercased whitespace-token
     pairs. Documents with < 2 tokens produce no rows."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
+    toks = words_col(F.lower(F.col(text_col)))
     pairs = F.when(
         F.size("toks") >= 2,
         F.zip_with(F.slice(F.col("toks"), 1, F.size("toks") - 1),
@@ -100,11 +101,8 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text",
     bigram_counts = (bg.groupBy("prev", "w")
                      .agg(F.count(F.lit(1)).alias("c2"))
                      .localCheckpoint(eager=False))
-    toks = (
-        df.select(F.explode(F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda t: t != "")).alias("tok"))
-    )
+    toks = df.select(
+        F.explode(words_col(F.lower(F.col(text_col)))).alias("tok"))
     unigram_counts = (toks.groupBy(F.col("tok").alias("prev"))
                       .agg(F.count(F.lit(1)).alias("c1"))
                       .localCheckpoint(eager=False))
@@ -176,8 +174,7 @@ def _trigrams_df(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     triples. Documents with < 3 tokens produce no rows. The
     ``size >= 3`` guard keeps the ``sequence`` ascending (F.sequence
     DESCENDS when end < start — the r4 window-enumeration rule)."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
+    toks = words_col(F.lower(F.col(text_col)))
     tri = F.when(
         F.size("toks") >= 3,
         F.transform(
@@ -216,11 +213,8 @@ def train_trigram_lm(df: DataFrame, text_col: str = "text",
     bigram_counts = (bg.groupBy("prev", "w")
                      .agg(F.count(F.lit(1)).alias("c2"))
                      .localCheckpoint(eager=False))
-    toks = (
-        df.select(F.explode(F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda t: t != "")).alias("tok"))
-    )
+    toks = df.select(
+        F.explode(words_col(F.lower(F.col(text_col)))).alias("tok"))
     unigram_counts = (toks.groupBy(F.col("tok").alias("prev"))
                       .agg(F.count(F.lit(1)).alias("c1"))
                       .localCheckpoint(eager=False))

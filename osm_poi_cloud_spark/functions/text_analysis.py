@@ -20,8 +20,18 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 
 
 def tokens_col(text: Column) -> Column:
-    """Whitespace tokenization (lowercased)."""
+    """Whitespace tokenization (lowercased). Unlike ``words_col`` it keeps
+    the empty token a blank text splits into (``""`` counts one token),
+    and the language-ID oracle SQL mirrors exactly that split."""
     return F.split(F.lower(F.trim(text)), "\\s+")
+
+
+def words_col(text: Column) -> Column:
+    """The non-empty ``\\s+``-separated runs of ``text``, case preserved
+    (pass ``F.lower(...)`` to fold case). The one word tokenizer of the
+    LM, embedding, BPE, n-gram, packing and span-dedup operators; NULL
+    text gives NULL."""
+    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
 
 def token_count_col(text: Column) -> Column:
@@ -281,8 +291,8 @@ def ngram_counts(df: DataFrame, n: int = 3,
     lowercase upstream if case-folded counts are wanted."""
     if n < 1:
         raise ValueError(f"need n >= 1, got {n}")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    base = df.select(toks.alias("_tk")).filter(F.size("_tk") >= n)
+    base = df.select(words_col(F.col(text_col)).alias("_tk")) \
+        .filter(F.size("_tk") >= n)
     grams = F.transform(
         F.sequence(F.lit(1), F.size("_tk") - F.lit(n - 1)),
         lambda i: F.concat_ws(" ", F.slice(F.col("_tk"), i, n)))
@@ -327,9 +337,8 @@ def pmi_bigrams(df: DataFrame, text_col: str = "text",
     """
     if min_count < 1:
         raise ValueError(f"need min_count >= 1, got {min_count}")
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    base = df.select(toks.alias("_tk")).filter(F.size("_tk") >= 2)
+    base = df.select(words_col(F.lower(F.col(text_col))).alias("_tk")) \
+        .filter(F.size("_tk") >= 2)
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("_tk") - F.lit(1)),
         lambda i: F.struct(F.element_at("_tk", i).alias("w1"),
@@ -441,8 +450,7 @@ def line_shape_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     trimmed = F.transform(lines, lambda l: F.trim(l))
     is_bullet = lambda l: (l.startswith("- ") | l.startswith("* ")  # noqa: E731
                            | l.startswith("•"))
-    words = lambda l: F.size(F.filter(  # noqa: E731
-        F.split(l, r"\s+"), lambda t: t != ""))
+    words = lambda l: F.size(words_col(l))  # noqa: E731
     n_lines = F.size(lines).cast("long")
     ppm = lambda k: F.expr(f"CAST(1000000 AS BIGINT) * {k} DIV n_lines")  # noqa: E731
     return (

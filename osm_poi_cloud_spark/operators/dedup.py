@@ -22,13 +22,16 @@ re-runs and resumes reproduce identical clusters.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import hashing as hx
+from ..functions.text_analysis import words_col
 from .iterative import iterative_scope
 
 _M61 = (1 << 61) - 1
@@ -603,55 +606,75 @@ def decontaminate(docs: DataFrame, evals: DataFrame, k: int = 8,
 # expressions (transform/slice/concat_ws inside codegen), no Python.
 
 
-def _span_windows(df: DataFrame, k: int, text_col: str, id_col: str,
-                  fingerprint: str) -> DataFrame:
-    """(id, win_pos, fp) — fingerprint of every k-word window. ``win_pos``
-    is the 0-based token index the window starts at. Documents shorter
-    than k words produce no rows (guarded: Spark's sequence() would
-    DESCEND for stop < start)."""
+class _Unit(NamedTuple):
+    """What word windows and char windows differ in: ``src`` maps the
+    text column to the per-document sequence the windows slide over,
+    ``length`` measures that sequence, and ``piece(src, j, k)`` is the
+    content of the k-unit window starting at 1-based position ``j``."""
+    src: Callable[[Column], Column]
+    length: Callable[[Column], Column]
+    piece: Callable[[Column, Column, int], Column]
+
+
+# k lowercased whitespace tokens joined by one space; ``win_pos`` is the
+# 0-based token index
+_WORDS = _Unit(lambda text: words_col(F.lower(text)), F.size,
+               lambda src, j, k: F.concat_ws(" ", F.slice(src, j, k)))
+# k chars of the whitespace-NORMALIZED text (runs of whitespace collapsed
+# to one space, trimmed) so whitespace-variant duplicates fingerprint
+# identically; matching is case-insensitive (the window is lowercased
+# inside the fingerprint only, keeping positions valid against the
+# case-preserving normalized text); ``win_pos`` is 0-based in
+# normalized-char coordinates
+_CHARS = _Unit(lambda text: F.trim(F.regexp_replace(text, r"\s+", " ")),
+               F.length,
+               lambda src, j, k: F.lower(F.substring(src, j, F.lit(k))))
+
+
+def _fingerprint(k: int, fingerprint: str):
+    """(hash, empty) — the Column hash of one window and the typed
+    window array of a document shorter than k. Every span operator
+    validates ``k`` and ``fingerprint`` here."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     if fingerprint == "xxhash64":
-        fp = lambda c: F.xxhash64(c)
-        empty = F.array().cast("array<bigint>")
-    elif fingerprint == "md5":
-        fp = lambda c: F.md5(c)
-        empty = F.array().cast("array<string>")
-    else:
-        raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
+        return F.xxhash64, F.array().cast("array<bigint>")
+    if fingerprint == "md5":
+        return F.md5, F.array().cast("array<string>")
+    raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
+
+
+def _windows(df: DataFrame, k: int, text_col: str, id_col: str,
+             fingerprint: str, unit: _Unit,
+             emit: Callable[[Column], Column]) -> DataFrame:
+    """(id, emit(wins)) — ``wins`` is the array of the fingerprints of
+    every k-unit window of a document, in window order. Documents
+    shorter than k units get the empty array (guarded: Spark's
+    sequence() would DESCEND for stop < start)."""
+    fp, empty = _fingerprint(k, fingerprint)
+    src = F.col("_src")
+    n = unit.length(src)
     wins = F.when(
-        F.size("toks") >= k,
-        F.transform(F.sequence(F.lit(1), F.size("toks") - (k - 1)),
-                    lambda j: fp(F.concat_ws(" ", F.slice(F.col("toks"), j, k)))),
+        n >= k,
+        F.transform(F.sequence(F.lit(1), n - (k - 1)),
+                    lambda j: fp(unit.piece(src, j, k))),
     ).otherwise(empty)
     return (
-        df.select(F.col(id_col), toks.alias("toks"))
-        .select(F.col(id_col), F.posexplode(wins).alias("win_pos", "fp"))
+        df.select(F.col(id_col), unit.src(F.col(text_col)).alias("_src"))
+        .select(F.col(id_col), emit(wins))
     )
 
 
-def _span_window_count(text_col: str, k: int):
-    """Map-side window count: the number of rows ``_span_windows`` emits
-    for a document is ``max(size(toks) - (k - 1), 0)`` — computable
-    without the explode (greatest() skips the NULL a NULL text produces
-    under ANSI size())."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    return F.when(F.col(text_col).isNull(), F.lit(0)).otherwise(
-        F.greatest(F.size(toks) - F.lit(k - 1), F.lit(0))).cast("long")
+def _rows(wins: Column) -> Column:
+    """One (win_pos, fp) row per window; ``win_pos`` is 0-based."""
+    return F.posexplode(wins).alias("win_pos", "fp")
 
 
-def duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
-                     id_col: str = "doc_id", min_docs: int = 2,
-                     fingerprint: str = "xxhash64") -> DataFrame:
-    """Catalog of duplicated spans: (fp, n_docs, n_occurrences) for every
-    k-word window appearing in >= ``min_docs`` distinct documents. One
-    explode + one partial-aggregated groupBy; at 100 TB the group count
-    is bounded by distinct window content, and the heavy hitters ARE the
-    output of interest."""
-    wins = _span_windows(df, k, text_col, id_col, fingerprint)
+def _dup_catalog(wins: DataFrame, id_col: str, min_docs: int) -> DataFrame:
+    """(fp, n_docs, n_occurrences) for every window fingerprint in >=
+    ``min_docs`` distinct documents. One partial-aggregated groupBy;
+    a consumer that keeps only ``fp`` gets the other aggregates pruned
+    from the plan."""
     return (
         wins.groupBy("fp")
         .agg(F.countDistinct(id_col).alias("n_docs"),
@@ -660,72 +683,48 @@ def duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
     )
 
 
-def remove_duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
-                            id_col: str = "doc_id", min_docs: int = 2,
-                            fingerprint: str = "xxhash64",
-                            spans: DataFrame | None = None) -> DataFrame:
-    """ExactSubstr-style span *removal* (Lee et al. 2022): cut the
-    duplicated k-word windows out of each document's text instead of
-    gating whole documents (``span_dedup_stats`` over-deletes when it
-    drops a doc, under-cleans when it keeps one).
-
-    Plan (everything native Column expressions, no Python):
-
-    1. fingerprint every k-word window (shared ``_span_windows`` kernel
-       — same tokenization as the catalog/stats ops),
-    2. flag fingerprints in >= ``min_docs`` distinct docs (or take a
-       pre-computed ``spans`` catalog carrying ``fp``, e.g. from
-       ``duplicated_spans`` over a LARGER corpus than ``df``),
-    3. per doc: sort flagged window positions and fold them into
-       disjoint [s, e) token intervals with one ``aggregate`` HOF
-       (adjacent/overlapping windows merge, so a long repeated passage
-       becomes ONE interval),
-    4. rewrite ``text`` keeping only tokens outside every interval
-       (indexed ``filter`` HOF; O(tokens x intervals) per doc — the
-       interval list is already gap-merged so it is small).
-
-    Shuffle shape: one id-hash exchange of the INPUT + the span
-    groupBy + one per-doc regroup; the final join reuses the input
-    exchange. The input barrier exists because this plan consumes
-    ``df`` three times (window branch, catalog branch, rewrite join):
-    without an exchange in between, Spark re-executes the whole input
-    LINEAGE per consumer — map-only upstreams (the curation cascade)
-    have no shuffle to reuse, so the r6 composition scaling pair
-    measured the cascade evaluating 3x inside this operator. One
-    explicit ``repartition(id)`` turns all three reads into
-    ``ReusedExchange`` of one materialized shuffle. The window
-    explode re-runs per consumer (map-only on top of the reused
-    exchange) — deliberately: an explicit fp-hash exchange of the RAW
-    window rows was tried in its place and measured ~2x slower in
-    isolation (6.8 s -> 12.7 s at sf0.1), because it forwards every
-    (fp, id, pos) row unreduced while the groupBy path collapses
-    duplicates map-side before its (cheaper) exchange, and AQE can
-    broadcast the small flagged-span catalog into the semi-join,
-    skipping the window exchange entirely.
-
-    Rewritten documents come back whitespace-normalized (tokens
-    re-joined with single spaces; that is the coordinate system the
-    window fingerprints live in). Untouched documents keep their text
-    byte-identical. Adds ``tokens_removed`` / ``chars_removed`` (0 for
-    untouched docs; ``chars_removed`` counts versus the normalized
-    form). Documents shorter than k tokens are never touched.
-    """
-    df = df.repartition(F.col(id_col))
-    wins = _span_windows(df, k, text_col, id_col, fingerprint)
+def _flagged(wins: DataFrame, id_col: str, min_docs: int,
+             spans: DataFrame | None = None) -> DataFrame:
+    """The window rows whose fingerprint is duplicated: listed in
+    ``spans`` when given (any catalog carrying ``fp``), else in the
+    catalog of ``wins`` itself."""
     if spans is None:
         # two consumers (catalog + flagged probe): materialize the
         # window rows once with a lazy localCheckpoint instead of
-        # re-running the window-hash pass per consumer (this is a
-        # narrow materialization, NOT the raw-row fp exchange the r6
-        # note below rejects — the groupBy still combines map-side and
-        # the catalog still broadcasts into the semi-join)
+        # re-running the window-hash pass per consumer (the
+        # containment/minhash materialization precedent; a narrow
+        # materialization, NOT the raw-row fp exchange the
+        # remove_duplicated_spans docstring rejects — the groupBy still
+        # combines map-side and the catalog still broadcasts into the
+        # semi-join). On span_removal at sf0.1 it measured 0.89x, i.e.
+        # costlier than the recompute it saves; kept as is pending a
+        # measured decision.
         wins = wins.localCheckpoint(eager=False)
-        spans = (wins.groupBy("fp")
-                 .agg(F.countDistinct(id_col).alias("n_docs"))
-                 .filter(F.col("n_docs") >= min_docs))
-    flagged = wins.join(spans.select("fp"), "fp", "left_semi")
+        spans = _dup_catalog(wins, id_col, min_docs)
+    return wins.join(spans.select("fp"), "fp", "left_semi")
+
+
+def _flag_and_merge(df: DataFrame, k: int, text_col: str, id_col: str,
+                    min_docs: int, fingerprint: str,
+                    spans: DataFrame | None, unit: _Unit) -> DataFrame:
+    """``df`` hash-partitioned on the id and left-joined to ``ivs``:
+    the document's flagged window positions, sorted and folded into
+    disjoint [s, e) intervals in ``unit`` coordinates by one
+    ``aggregate`` HOF (adjacent/overlapping windows merge, so a long
+    repeated passage becomes ONE interval). ``ivs`` is NULL for a
+    document without a flagged window. Both removers run this and
+    keep only their own rewrite."""
+    # input barrier, added when this plan read the input three times
+    # (the r6 composition pair measured the map-only curation cascade
+    # running 3x inside the remover); the window checkpoint now covers
+    # the third read, and a counting probe measures two evaluations of
+    # the input with or without the barrier — dropping it is a plan
+    # change left to a measured decision
+    df = df.repartition(F.col(id_col))
+    wins = _windows(df, k, text_col, id_col, fingerprint, unit, _rows)
     intervals = (
-        flagged.groupBy(id_col)
+        _flagged(wins, id_col, min_docs, spans)
+        .groupBy(id_col)
         .agg(F.sort_array(F.collect_list("win_pos")).alias("ps"))
         .select(
             id_col,
@@ -747,12 +746,74 @@ def remove_duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
             ).alias("ivs"),
         )
     )
-    # original-CASE tokens: same split as the fingerprint kernel minus the
-    # lower(), so positions line up 1:1 with win_pos coordinates
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-    out = (
-        df.join(intervals, id_col, "left")
-        .withColumn("_toks", toks)
+    return df.join(intervals, id_col, "left")
+
+
+def duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
+                     id_col: str = "doc_id", min_docs: int = 2,
+                     fingerprint: str = "xxhash64") -> DataFrame:
+    """Catalog of duplicated spans: (fp, n_docs, n_occurrences) for every
+    k-word window appearing in >= ``min_docs`` distinct documents. One
+    explode + one partial-aggregated groupBy; at 100 TB the group count
+    is bounded by distinct window content, and the heavy hitters ARE the
+    output of interest."""
+    wins = _windows(df, k, text_col, id_col, fingerprint, _WORDS, _rows)
+    return _dup_catalog(wins, id_col, min_docs)
+
+
+def remove_duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
+                            id_col: str = "doc_id", min_docs: int = 2,
+                            fingerprint: str = "xxhash64",
+                            spans: DataFrame | None = None) -> DataFrame:
+    """ExactSubstr-style span *removal* (Lee et al. 2022): cut the
+    duplicated k-word windows out of each document's text instead of
+    gating whole documents (``span_dedup_stats`` over-deletes when it
+    drops a doc, under-cleans when it keeps one).
+
+    Plan (everything native Column expressions, no Python):
+
+    1. fingerprint every k-word window (the span kernel shared with the
+       catalog/stats ops — same tokenization),
+    2. flag fingerprints in >= ``min_docs`` distinct docs (or take a
+       pre-computed ``spans`` catalog carrying ``fp``, e.g. from
+       ``duplicated_spans`` over a LARGER corpus than ``df``),
+    3. per doc: sort flagged window positions and fold them into
+       disjoint [s, e) token intervals with one ``aggregate`` HOF,
+    4. rewrite ``text`` keeping only tokens outside every interval
+       (indexed ``filter`` HOF; O(tokens x intervals) per doc — the
+       interval list is already gap-merged so it is small).
+
+    Shuffle shape: one id-hash exchange of the INPUT
+    (``repartition(id)``), the span groupBy and one per-doc regroup;
+    the per-doc intervals broadcast into the rewrite join when small.
+    Without ``spans`` the window rows are materialized once by a lazy
+    ``localCheckpoint`` that feeds both the catalog and the flagged
+    probe. The input is read twice — by the window branch and by the
+    rewrite join — and the two reads do not share the exchange (the
+    optimizer infers ``isnotnull(id)`` for the window branch and pushes
+    it below that branch's exchange): a counting probe upstream
+    measures two evaluations of the input, with or without the
+    checkpoint and with an external ``spans``. The window rows get no
+    fp-hash exchange of their own, deliberately: one in place of the
+    groupBy path was measured ~2x slower in isolation (6.8 s -> 12.7 s
+    at sf0.1), because it forwards every (fp, id, pos) row unreduced
+    while the groupBy path collapses duplicates map-side before its
+    (cheaper) exchange, and AQE can broadcast the small flagged-span
+    catalog into the semi-join, skipping the window exchange entirely.
+
+    Rewritten documents come back whitespace-normalized (tokens
+    re-joined with single spaces; that is the coordinate system the
+    window fingerprints live in). Untouched documents keep their text
+    byte-identical. Adds ``tokens_removed`` / ``chars_removed`` (0 for
+    untouched docs; ``chars_removed`` counts versus the normalized
+    form). Documents shorter than k tokens are never touched.
+    """
+    out = _flag_and_merge(df, k, text_col, id_col, min_docs, fingerprint,
+                          spans, _WORDS)
+    # original-CASE tokens: the fingerprint tokenizer minus the lower(),
+    # so positions line up 1:1 with win_pos coordinates
+    return (
+        out.withColumn("_toks", words_col(F.col(text_col)))
         .withColumn(
             "_kept",
             F.when(F.col("ivs").isNull(), F.col("_toks")).otherwise(
@@ -782,39 +843,6 @@ def remove_duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
         )
         .drop("ivs", "_toks", "_kept")
     )
-    return out
-
-
-def _char_span_windows(df: DataFrame, k: int, text_col: str, id_col: str,
-                       fingerprint: str) -> DataFrame:
-    """(id, win_pos, fp) — fingerprint of every k-CHAR window. The
-    coordinate system is the whitespace-NORMALIZED text (runs of
-    whitespace collapsed to one space, trimmed) so whitespace-variant
-    duplicates fingerprint identically; matching is case-insensitive
-    (the window is lowercased inside the fingerprint only, keeping
-    positions valid against the case-preserving normalized text).
-    ``win_pos`` is 0-based in normalized-char coordinates. Documents
-    shorter than k chars produce no rows."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if fingerprint == "xxhash64":
-        fp = lambda c: F.xxhash64(c)
-        empty = F.array().cast("array<bigint>")
-    elif fingerprint == "md5":
-        fp = lambda c: F.md5(c)
-        empty = F.array().cast("array<string>")
-    else:
-        raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    wins = F.when(
-        F.length("_norm") >= k,
-        F.transform(F.sequence(F.lit(1), F.length("_norm") - (k - 1)),
-                    lambda j: fp(F.lower(F.substring(F.col("_norm"), j, F.lit(k))))),
-    ).otherwise(empty)
-    return (
-        df.select(F.col(id_col), norm.alias("_norm"))
-        .select(F.col(id_col), F.posexplode(wins).alias("win_pos", "fp"))
-    )
 
 
 def duplicated_char_spans(df: DataFrame, k: int = 40, text_col: str = "text",
@@ -828,13 +856,8 @@ def duplicated_char_spans(df: DataFrame, k: int = 40, text_col: str = "text",
     misses any duplicated run shorter than k WORDS, however long in
     chars. Row volume is O(total chars) — same asymptotic class as
     tokenizing the corpus, shuffle is the one fingerprint groupBy."""
-    wins = _char_span_windows(df, k, text_col, id_col, fingerprint)
-    return (
-        wins.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("n_docs"),
-             F.count(F.lit(1)).alias("n_occurrences"))
-        .filter(F.col("n_docs") >= min_docs)
-    )
+    wins = _windows(df, k, text_col, id_col, fingerprint, _CHARS, _rows)
+    return _dup_catalog(wins, id_col, min_docs)
 
 
 def remove_duplicated_char_spans(df: DataFrame, k: int = 40,
@@ -850,55 +873,19 @@ def remove_duplicated_char_spans(df: DataFrame, k: int = 40,
     duplicates (fingerprints live in whitespace-normalized coordinates,
     so ``"a  b"`` and ``"a b"`` match).
 
-    Same all-native plan as ``remove_duplicated_spans`` — fingerprint
-    windows, flag, per-doc sort + one ``aggregate`` HOF interval merge
-    — except the rewrite concatenates the complement SUBSTRINGS of the
-    normalized text (an ``aggregate`` over the merged intervals with a
-    (kept_text, cursor) accumulator) instead of filtering a token
-    array: O(len) per doc, no char-array explosion.
+    Same all-native plan as ``remove_duplicated_spans`` — the same
+    input exchange, window checkpoint, flagging and interval merge, and
+    the same two evaluations of the input — except the rewrite
+    concatenates the complement SUBSTRINGS of the normalized text (an
+    ``aggregate`` over the merged intervals with a (kept_text, cursor)
+    accumulator) instead of filtering a token array: O(len) per doc,
+    no char-array explosion.
 
     Untouched documents keep their text byte-identical; rewritten ones
     come back whitespace-normalized (the fingerprint coordinate
     system). ``chars_removed`` counts versus the normalized form."""
-    # input barrier: same three-consumer shape as
-    # remove_duplicated_spans — without it the input lineage (often
-    # the map-only curation cascade) re-executes per consumer (r6
-    # composition pair finding; see the word-level twin's docstring,
-    # incl. why the raw window rows deliberately do NOT get their own
-    # fp exchange)
-    df = df.repartition(F.col(id_col))
-    wins = _char_span_windows(df, k, text_col, id_col, fingerprint)
-    if spans is None:
-        # same two-consumer materialization as the word-level twin
-        wins = wins.localCheckpoint(eager=False)
-        spans = (wins.groupBy("fp")
-                 .agg(F.countDistinct(id_col).alias("n_docs"))
-                 .filter(F.col("n_docs") >= min_docs))
-    flagged = wins.join(spans.select("fp"), "fp", "left_semi")
-    intervals = (
-        flagged.groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("win_pos")).alias("ps"))
-        .select(
-            id_col,
-            F.aggregate(
-                "ps",
-                F.array().cast("array<struct<s:int,e:int>>"),
-                lambda acc, p: F.when(
-                    (F.size(acc) == F.lit(0)) | (p > F.element_at(acc, -1)["e"]),
-                    F.concat(acc, F.array(F.struct(p.alias("s"), (p + k).alias("e")))),
-                ).otherwise(
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(F.struct(
-                            F.element_at(acc, -1)["s"].alias("s"),
-                            F.greatest(F.element_at(acc, -1)["e"], p + k).alias("e"),
-                        )),
-                    )
-                ),
-            ).alias("ivs"),
-        )
-    )
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    out = _flag_and_merge(df, k, text_col, id_col, min_docs, fingerprint,
+                          spans, _CHARS)
     # complement concat: walk the merged intervals with a (text, cursor)
     # accumulator, emitting the gap before each interval, then the tail
     kept = F.aggregate(
@@ -912,9 +899,8 @@ def remove_duplicated_char_spans(df: DataFrame, k: int = 40,
             F.col("_norm"), acc["cur"] + 1,
             F.length("_norm") - acc["cur"])),
     )
-    out = (
-        df.join(intervals, id_col, "left")
-        .withColumn("_norm", norm)
+    return (
+        out.withColumn("_norm", _CHARS.src(F.col(text_col)))
         .withColumn("_kept", F.when(F.col("ivs").isNull(),
                                     F.col("_norm")).otherwise(kept))
         .withColumn(
@@ -929,7 +915,6 @@ def remove_duplicated_char_spans(df: DataFrame, k: int = 40,
         )
         .drop("ivs", "_norm", "_kept")
     )
-    return out
 
 
 def span_dedup_stats(df: DataFrame, k: int = 8, text_col: str = "text",
@@ -941,17 +926,7 @@ def span_dedup_stats(df: DataFrame, k: int = 8, text_col: str = "text",
     trims documents whose duplicated-window fraction is high. Two
     shuffles total (the span groupBy + the per-doc regroup); documents
     shorter than k words report 0/0."""
-    # lazy localCheckpoint: the window rows feed the dup catalog AND the
-    # semi-join probe side — one hash pass instead of two (the
-    # containment/minhash materialization precedent).
-    wins = _span_windows(df, k, text_col, id_col,
-                         fingerprint).localCheckpoint(eager=False)
-    dup = (
-        wins.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("fp")
-    )
+    wins = _windows(df, k, text_col, id_col, fingerprint, _WORDS, _rows)
     # only the FLAGGED windows regroup (semi-join, broadcastable
     # catalog) — the r6 shape left-outer-joined and regrouped EVERY
     # window row just to count them; the total window count per doc is
@@ -959,12 +934,16 @@ def span_dedup_stats(df: DataFrame, k: int = 8, text_col: str = "text",
     # table costs one narrow pass + a one-row-per-doc exchange, and it
     # doubles as the distinct-id universe (guide §2.3/2.4).
     dup_per_doc = (
-        wins.join(dup, "fp", "left_semi")
+        _flagged(wins, id_col, min_docs)
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_dup_windows"))
     )
+    # greatest() also maps the NULL a NULL text produces under ANSI
+    # size() to 0 windows
+    n_windows = F.greatest(
+        _WORDS.length(_WORDS.src(F.col(text_col))) - F.lit(k - 1), F.lit(0))
     base = (
-        df.select(F.col(id_col), _span_window_count(text_col, k).alias("_nw"))
+        df.select(F.col(id_col), n_windows.cast("long").alias("_nw"))
         .groupBy(id_col)
         .agg(F.sum("_nw").alias("n_windows"))
     )
@@ -1079,39 +1058,6 @@ def remove_boilerplate_lines(df: DataFrame, host_col: str = "host",
     )
 
 
-def _span_fp_arrays(df: DataFrame, k: int, text_col: str, id_col: str,
-                    fingerprint: str) -> DataFrame:
-    """(id, _fps) — the DISTINCT k-word-window fingerprints of each
-    document as one map-side array (same tokenization + fingerprint
-    kernel as ``_span_windows``; ``array_distinct`` keeps first
-    occurrence, and set-equality is all the consumers need). No
-    explode, no exchange: per-document distinctness never required a
-    corpus-wide ``.distinct()``. Documents shorter than k words get an
-    empty array."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if fingerprint == "xxhash64":
-        fp = lambda c: F.xxhash64(c)
-        empty = F.array().cast("array<bigint>")
-    elif fingerprint == "md5":
-        fp = lambda c: F.md5(c)
-        empty = F.array().cast("array<string>")
-    else:
-        raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    wins = F.when(
-        F.size("toks") >= k,
-        F.array_distinct(F.transform(
-            F.sequence(F.lit(1), F.size("toks") - (k - 1)),
-            lambda j: fp(F.concat_ws(" ", F.slice(F.col("toks"), j, k))))),
-    ).otherwise(empty)
-    return (
-        df.select(F.col(id_col), toks.alias("toks"))
-        .select(F.col(id_col), wins.alias("_fps"))
-    )
-
-
 def containment_pairs(df: DataFrame, k: int = 8, text_col: str = "text",
                       id_col: str = "doc_id",
                       min_containment_ppm: int = 600_000,
@@ -1130,7 +1076,8 @@ def containment_pairs(df: DataFrame, k: int = 8, text_col: str = "text",
     wholesale quotation, syndication wrappers and subset pages.
 
     Plan (all native): map-side per-doc DISTINCT fingerprint arrays
-    (``_span_fp_arrays`` — per-doc distinctness needs no exchange) ->
+    (the span kernel's window array under ``array_distinct``, which
+    keeps first occurrence — per-doc distinctness needs no exchange) ->
     |S(doc)| as the array size (map-side) -> df >= 2 prefilter (one
     map-side-combined fp count; singleton fps can never pair) ->
     fp equi-self-join (the join COUNT over (a, b) IS the intersection
@@ -1165,8 +1112,10 @@ def containment_pairs(df: DataFrame, k: int = 8, text_col: str = "text",
     # passes with one hash pass + three cheap re-reads. Storage is the
     # hash array (~8 B/word), the same size class the minhash index
     # already materializes.
-    base = _span_fp_arrays(df, k, text_col, id_col,
-                           fingerprint).localCheckpoint(eager=False)
+    base = _windows(
+        df, k, text_col, id_col, fingerprint, _WORDS,
+        lambda wins: F.array_distinct(wins).alias("_fps"),
+    ).localCheckpoint(eager=False)
     wins = base.select(F.col(id_col), F.explode("_fps").alias("fp"))
     sizes = base.select(F.col(id_col),
                         F.size("_fps").cast("long").alias("n_windows"))

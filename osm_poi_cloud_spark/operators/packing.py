@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text_analysis import words_col
+
 
 def pack_sequences(df: DataFrame, budget: int, token_col: str = "n_tokens",
                    pack_col: str = "lang", order_col: str = "doc_id",
@@ -142,8 +144,7 @@ def chunk_documents(df: DataFrame, max_tokens: int = 512, overlap: int = 64,
             f"need 0 <= overlap < max_tokens, got overlap={overlap}, "
             f"max_tokens={max_tokens}")
     stride = max_tokens - overlap
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    base = df.select(F.col(id_col), toks.alias("_toks")) \
+    base = df.select(F.col(id_col), words_col(F.col(text_col)).alias("_toks")) \
         .filter(F.size("_toks") > 0)
     starts = F.sequence(
         F.lit(1), F.greatest(F.size("_toks") - F.lit(overlap), F.lit(1)),

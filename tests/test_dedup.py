@@ -269,6 +269,97 @@ def test_remove_duplicated_spans_external_catalog(spark):
     assert out.loc[0, "tokens_removed"] == 8
 
 
+def _merged_intervals(pos, k):
+    """Reference interval sweep: sorted window starts -> disjoint [s, e)
+    runs, adjacent or overlapping k-windows merged."""
+    ivs = []
+    for p in pos:
+        if ivs and p <= ivs[-1][1]:
+            ivs[-1][1] = max(ivs[-1][1], p + k)
+        else:
+            ivs.append([p, p + k])
+    return ivs
+
+
+@pytest.mark.parametrize("fingerprint", ["xxhash64", "md5"])
+def test_word_spans_independent_recompute(spark, fingerprint):
+    """Word-level twin of the char-span recompute: the catalog, the
+    per-doc stats and the removal all equal a pure-Python sweep over
+    window STRINGS (no hashing) on a seeded corpus with mixed case,
+    tabs/newlines, leading/trailing whitespace, a NULL text, docs
+    shorter than k, a whitespace-only doc and in-doc repeats."""
+    import re
+    from collections import defaultdict
+
+    k, min_docs = 6, 2
+    rng = np.random.RandomState(11)
+    vocab = ["Alpha", "beta", "GAMMA", "delta", "Echo", "fox", "Golf", "hotel",
+             "India", "juliet", "KILO", "lima", "Mike", "nov", "Oscar", "papa"]
+    seps = [" ", "\t", "\n", "  ", " \t\n "]
+    passages = [[vocab[j] for j in rng.randint(0, len(vocab), 9)] for _ in range(3)]
+
+    def recase(w):
+        return rng.choice([w.lower(), w.upper(), w.capitalize()])
+
+    def render(words):
+        body = "".join(w + rng.choice(seps) for w in words).rstrip()
+        return rng.choice(["", " ", "\t", "\n "]) + body + rng.choice(["", " ", "\n"])
+
+    texts = []
+    for _ in range(36):
+        words = [vocab[j] for j in rng.randint(0, len(vocab), rng.randint(2, 20))]
+        for _ in range(rng.randint(0, 3)):  # 0-2 planted passages, may repeat in-doc
+            at = rng.randint(0, len(words) + 1)
+            words[at:at] = passages[rng.randint(len(passages))]
+        texts.append(render([recase(w) for w in words]))
+    texts += [None, "Short one", "   \t\n ", render(passages[0] + passages[0])]
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
+
+    ws = re.compile(r"\s+", re.ASCII)
+    toks = [None if t is None else [w for w in ws.split(t) if w] for t in texts]
+    wins = [[] if ts is None else [" ".join(ts[i:i + k]).lower()
+                                   for i in range(len(ts) - k + 1)] for ts in toks]
+    docs_of, occ = defaultdict(set), defaultdict(int)
+    for did, dw in enumerate(wins):
+        for w in dw:
+            docs_of[w].add(did)
+            occ[w] += 1
+    dup = {w for w, ds in docs_of.items() if len(ds) >= min_docs}
+    assert len(dup) >= 5  # the planted passages are found
+
+    cat = dd.duplicated_spans(df, k=k, min_docs=min_docs,
+                              fingerprint=fingerprint).toPandas()
+    assert sorted(zip(cat["n_docs"], cat["n_occurrences"])) == \
+        sorted((len(docs_of[w]), occ[w]) for w in dup)
+
+    stats = dd.span_dedup_stats(df, k=k, min_docs=min_docs, fingerprint=fingerprint) \
+        .toPandas().set_index("doc_id").sort_index()
+    assert list(stats["n_windows"]) == [len(dw) for dw in wins]
+    assert list(stats["n_dup_windows"]) == [sum(w in dup for w in dw) for dw in wins]
+
+    out = dd.remove_duplicated_spans(df, k=k, min_docs=min_docs, fingerprint=fingerprint) \
+        .toPandas().set_index("doc_id").sort_index()
+    n_cut = 0
+    for did, ts in enumerate(toks):
+        pos = [i for i, w in enumerate(wins[did]) if w in dup]
+        if not pos:
+            if texts[did] is None:
+                assert pd.isna(out.loc[did, "text"])
+            else:
+                assert out.loc[did, "text"] == texts[did]  # byte-identical
+            assert out.loc[did, "tokens_removed"] == 0
+            assert out.loc[did, "chars_removed"] == 0
+            continue
+        ivs = _merged_intervals(pos, k)
+        kept = [t for i, t in enumerate(ts) if not any(s <= i < e for s, e in ivs)]
+        assert out.loc[did, "text"] == " ".join(kept), did
+        assert out.loc[did, "tokens_removed"] == len(ts) - len(kept)
+        assert out.loc[did, "chars_removed"] == len(" ".join(ts)) - len(" ".join(kept))
+        n_cut += 1
+    assert n_cut >= 5
+
+
 def test_incremental_minhash_matches_equal_cross_split_pairs(spark):
     """Splitting the corpus into index (even ids) and batch (odd ids),
     the incremental probe must find EXACTLY the minhash_lsh_pairs
@@ -443,12 +534,7 @@ def test_remove_duplicated_char_spans(spark):
             assert out.loc[did, "text"] == texts[did]  # byte-identical
             assert out.loc[did, "chars_removed"] == 0
             continue
-        ivs = []
-        for p in pos:
-            if ivs and p <= ivs[-1][1]:
-                ivs[-1][1] = max(ivs[-1][1], p + k)
-            else:
-                ivs.append([p, p + k])
+        ivs = _merged_intervals(pos, k)
         kept, cur = [], 0
         for s, e in ivs:
             kept.append(n[cur:s])
@@ -461,10 +547,46 @@ def test_remove_duplicated_char_spans(spark):
     # whitespace variance in doc 1
     assert slogan not in out.loc[0, "text"] and slogan not in out.loc[1, "text"]
 
-    with pytest.raises(ValueError):
-        dd.duplicated_char_spans(df, k=1)
-    with pytest.raises(ValueError):
-        dd.remove_duplicated_char_spans(df, fingerprint="sha1")
+
+SPAN_OPS = ["duplicated_spans", "duplicated_char_spans", "remove_duplicated_spans",
+            "remove_duplicated_char_spans", "span_dedup_stats", "containment_pairs"]
+
+
+@pytest.mark.parametrize("op", SPAN_OPS)
+@pytest.mark.parametrize("kw, msg", [({"k": 1}, "k must be >= 2"),
+                                     ({"fingerprint": "sha1"}, "fingerprint must be")])
+def test_span_ops_validate_k_and_fingerprint(spark, op, kw, msg):
+    """Every span entry point rejects k < 2 and an unknown fingerprint
+    eagerly, before any job runs."""
+    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=msg):
+        getattr(dd, op)(df, **kw)
+
+
+@pytest.mark.parametrize("op, max_evals", [
+    ("remove_duplicated_spans", 2), ("remove_duplicated_char_spans", 2),
+    ("span_dedup_stats", 2), ("containment_pairs", 1)])
+def test_span_ops_input_evaluations(spark, op, max_evals):
+    """Input-lineage guard: a counting probe upstream of the operator
+    sees the input evaluated no more often than the plan needs (the
+    removers and the stats read it by two branches, containment by
+    one), so a refactor cannot add a pass over an expensive upstream
+    such as the curation cascade."""
+    n = 200
+    base = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(n),
+        "text": [" ".join(f"w{(i * 7 + j) % 50}" for j in range(20)) for i in range(n)],
+    }))
+    acc = spark.sparkContext.accumulator(0)
+
+    def probe(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    out = getattr(dd, op)(base.mapInPandas(probe, schema=base.schema)).collect()
+    assert out
+    assert n <= acc.value <= max_evals * n
 
 
 # ------------------------------------------------------------- containment

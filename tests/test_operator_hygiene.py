@@ -4,6 +4,7 @@
 * compact() sizes output from file metadata, not a scan
 * connected_components supports reliable checkpointing
 * only operators/iterative.py touches the checkpoint dir / shuffle width
+* only functions/text_analysis.py splits text on whitespace
 * LSH/IVF determinism without driver probes
 """
 
@@ -97,6 +98,40 @@ def test_session_state_only_in_iterative_scope():
             line = src.count("\n", 0, m.start()) + 1
             offenders.append(f"{path.relative_to(PKG)}:{line}: {m.group(0)}")
     assert not offenders, f"use operators/iterative.iterative_scope: {offenders}"
+
+
+# Whitespace word splitting is done one way: functions.text_analysis
+# (words_col / tokens_col). plans/contract.py is the checking side and
+# keeps its own SQL and query wrappers.
+WS_SPLIT_ALLOWED = {"functions/text_analysis.py", "plans/contract.py"}
+
+
+def _ws_splits(src: str):
+    r"""Line numbers of ``split(..., r"\s+")`` calls and of string
+    literals holding a SQL ``split(`` with a ``\s+`` pattern."""
+    hits = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
+            if name == "split" and any(
+                    isinstance(a, ast.Constant) and isinstance(a.value, str)
+                    and r"\s+" in a.value for a in node.args):
+                hits.append(node.lineno)
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and re.search(r"split\(.*\\s\+", node.value, re.S)):
+            hits.append(node.lineno)
+    return hits
+
+
+def test_whitespace_split_only_in_text_analysis():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        if rel in WS_SPLIT_ALLOWED:
+            continue
+        offenders += [f"{rel}:{line}" for line in _ws_splits(path.read_text())]
+    assert not offenders, f"use functions.text_analysis.words_col: {offenders}"
 
 
 def test_source_bytes_is_metadata_only(spark, tmp_path):
