@@ -26,7 +26,7 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import get_spark
@@ -113,9 +113,27 @@ def stage_process(spark: SparkSession, pages_path: str, out: str, run_id: str,
 
 def stage_merge(spark: SparkSession, out: str) -> None:
     pois_path = os.path.join(out, "pois")
-    mg.compact(spark, pois_path, os.path.join(out, "pois_merged"), target_file_mb=128)
-    stats = mg.merge_stats(spark.read.parquet(os.path.join(out, "pois_merged"))).collect()[0]
+    stats = mg.compact(spark, pois_path, os.path.join(out, "pois_merged"), target_file_mb=128,
+                       observe=mg.merge_stats_cols())
     print(f"merge: {stats['total']:,} POIs, {stats['classes']} classes, {stats['shards']} shards")
+
+
+def tile_table(pois: DataFrame, min_zoom: int, max_zoom: int, cap: int) -> DataFrame:
+    """Pyramid + per-tile cap + MVT encode: (z, x, y, n_features,
+    features, mvt), one row per tile, behind ONE exchange.
+
+    The range exchange on (z, x, y) sits on the pyramid rows, before the
+    cap: the cap window and ``build_tiles``' group-by both accept a range
+    partitioning on their keys, so they reuse it, and the partitioner's
+    sampling job covers only the native scan + explode. (Range-shuffling
+    the encoded tiles instead re-ran the window, the aggregate and the
+    Python encode once for the sample and once for the shuffle.) Each
+    partition is a contiguous (z, x, y) run, so the z-partitioned write
+    gives files whose parquet min/max row-group stats make a single-tile
+    point read a seek — the layout server.py's tiles_path mode serves
+    from."""
+    pyramid = tl.assign_tile_pyramid(pois, min_zoom, max_zoom).repartitionByRange("z", "x", "y")
+    return mvt.encode_tiles_mvt(tl.build_tiles(tl.per_tile_cap(pyramid, cap=cap)))
 
 
 def stage_tiles(spark: SparkSession, out: str, min_zoom: int = 2, max_zoom: int = 14,
@@ -129,24 +147,18 @@ def stage_tiles(spark: SparkSession, out: str, min_zoom: int = 2, max_zoom: int 
     Hilbert sort, the writer holds only directory entries, payload
     bytes go disk-to-disk — same shape as the reference, where
     tippecanoe runs single-node after the merge
-    (generate_pmtiles.py:135-162), but without tile data in memory."""
-    pois = spark.read.parquet(os.path.join(out, "pois_merged"))
-    tiled = tl.per_tile_cap(tl.assign_tile_pyramid(pois, min_zoom, max_zoom), cap=cap)
-    tiles = mvt.encode_tiles_mvt(tl.build_tiles(tiled))
-    # range-cluster on (z, x, y) before the z-partitioned write: each
-    # output file then holds a contiguous (x, y) run, so parquet
-    # min/max row-group stats make a single-tile point read a seek
-    # (directory pruning on z + stats pruning on x/y — the layout
-    # server.py's tiles_path mode serves from)
-    (tiles.repartitionByRange("z", "x", "y")
-     .write.mode("overwrite").partitionBy("z").parquet(os.path.join(out, "tiles")))
-    stored = spark.read.parquet(os.path.join(out, "tiles"))
-    n = stored.count()
+    (generate_pmtiles.py:135-162), but without tile data in memory.
+    The tile count is observed on the write, not re-counted."""
+    tiles_path = os.path.join(out, "tiles")
+    counted = Observation("tiles")
+    (tile_table(spark.read.parquet(os.path.join(out, "pois_merged")), min_zoom, max_zoom, cap)
+     .observe(counted, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").partitionBy("z").parquet(tiles_path))
     stats = mvt.write_pmtiles_streamed(
-        stored.filter(F.col("z") <= pmtiles_max_zoom).select("z", "x", "y", "mvt"),
+        spark.read.parquet(tiles_path).filter(F.col("z") <= pmtiles_max_zoom).select("z", "x", "y", "mvt"),
         os.path.join(out, "pois.pmtiles"), min_zoom, min(max_zoom, pmtiles_max_zoom),
     )
-    print(f"tiles: {n:,} tiles z{min_zoom}-z{max_zoom}; pmtiles: {stats}")
+    print(f"tiles: {counted.get['n']:,} tiles z{min_zoom}-z{max_zoom}; pmtiles: {stats}")
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 MERCATOR_LAT_LIMIT = 85.05112878  # Web-Mercator clamp (reference stack/sharding/src/main.rs:317)
 
@@ -62,3 +63,12 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """A driver-built table as a ``LocalRelation``: the rows travel in the
+    plan, so reading them back launches no Spark job. ``createDataFrame``
+    over Python tuples builds a pickled RDD instead, and every consumer
+    pays a job to read it. Arrow stays local when ``table`` is empty;
+    empty pandas falls back to an RDD."""
+    return spark.createDataFrame(table)

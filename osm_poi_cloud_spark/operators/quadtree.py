@@ -27,9 +27,11 @@ import math
 from collections import defaultdict
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..config import local_table
 from ..functions import tile_math as tm
 
 
@@ -134,11 +136,15 @@ def with_salted_shard_key(df: DataFrame, salts: dict[str, int], row_key: str,
 
 def shards_df(spark, shards: list[Shard]) -> DataFrame:
     """Shard manifest as a small broadcastable DataFrame (the Spark form
-    of the GeoJSON manifest, main.rs:280-308)."""
-    return spark.createDataFrame(
-        [(s.zoom, s.x, s.y, s.shard_id, s.node_count) for s in shards],
-        schema="z int, x long, y long, shard_id string, node_count long",
-    )
+    of the GeoJSON manifest, main.rs:280-308) — an Arrow-built local
+    table, so collecting or broadcasting it launches no Spark job."""
+    return local_table(spark, pa.table({
+        "z": pa.array([s.zoom for s in shards], pa.int32()),
+        "x": pa.array([s.x for s in shards], pa.int64()),
+        "y": pa.array([s.y for s in shards], pa.int64()),
+        "shard_id": pa.array([s.shard_id for s in shards], pa.string()),
+        "node_count": pa.array([s.node_count for s in shards], pa.int64()),
+    }))
 
 
 def shards_geojson(shards: list[Shard]) -> str:

@@ -18,6 +18,12 @@ decisions").
 Checksum: ``bit_xor(xxhash64(all columns))`` — commutative/associative
 (partition-order independent), overflow-free under ANSI mode, and
 sensitive to any changed value.
+
+Job shape of one ``run_stage_with_resume``: the committed keys are
+collected once, the per-partition summary is collected once (it yields
+the row total, the processed keys and the lineage rows), the data is
+written once, and the data rows and ``_EMPTY`` rows go out in ONE
+lineage append built on the driver as an Arrow-backed local table.
 """
 
 from __future__ import annotations
@@ -25,13 +31,18 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-LINEAGE_SCHEMA = (
-    "run_id string, stage string, partition_key string, input_split string, "
-    "row_count long, checksum long, committed_at double"
-)
+from ..config import local_table
+
+LINEAGE_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("stage", pa.string()), ("partition_key", pa.string()),
+    ("input_split", pa.string()), ("row_count", pa.int64()), ("checksum", pa.int64()),
+    ("committed_at", pa.float64()),
+])
 
 
 def partition_summary(df: DataFrame, key_col: str) -> DataFrame:
@@ -63,8 +74,8 @@ class LineageLog:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], schema=LINEAGE_SCHEMA)
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
+            return local_table(self.spark, LINEAGE_SCHEMA.empty_table())
+        return self.spark.read.schema(from_arrow_schema(LINEAGE_SCHEMA)).parquet(self.path)
 
     def completed_keys(self, run_id: str, stage: str) -> DataFrame:
         """Distinct partition keys already committed (including empty
@@ -76,25 +87,25 @@ class LineageLog:
             .distinct()
         )
 
-    def commit(self, summaries: DataFrame, run_id: str, stage: str, input_split: str = "") -> None:
-        (
-            summaries.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_key"),
-                F.lit(input_split).alias("input_split"),
-                F.col("row_count"),
-                F.col("checksum"),
-                F.lit(time.time()).alias("committed_at"),
-            ).write.mode("append").parquet(self.path)
-        )
-
-    def commit_empty(self, keys: list[str], run_id: str, stage: str, input_split: str = "") -> None:
-        """row_count=0 rows — the reference's _EMPTY markers (process.py:396-401)."""
+    def commit(self, summary: list[Row], empty_keys: list[str], run_id: str, stage: str,
+               input_split: str = "") -> None:
+        """Append one lineage row per ``partition_summary`` row plus a
+        row_count=0 row per ``empty_keys`` entry (the reference's _EMPTY
+        markers, process.py:396-401) — one append, one file."""
+        keys = [r["partition_key"] for r in summary] + list(empty_keys)
         if not keys:
             return
-        rows = [(run_id, stage, k, input_split, 0, 0, time.time()) for k in keys]
-        self.spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(self.path)
+        n = len(keys)
+        table = pa.table({
+            "run_id": [run_id] * n,
+            "stage": [stage] * n,
+            "partition_key": keys,
+            "input_split": [input_split] * n,
+            "row_count": [r["row_count"] for r in summary] + [0] * len(empty_keys),
+            "checksum": [r["checksum"] for r in summary] + [0] * len(empty_keys),
+            "committed_at": [time.time()] * n,
+        }, schema=LINEAGE_SCHEMA)
+        local_table(self.spark, table).coalesce(1).write.mode("append").parquet(self.path)
 
 
 def run_stage_with_resume(
@@ -109,54 +120,48 @@ def run_stage_with_resume(
 ) -> dict:
     """Execute one partitioned stage idempotently.
 
-    1. anti-join ``df`` against lineage keys already committed for
-       (run_id, stage) — the reference's skip-processed-shards logic;
-    2. append the surviving partitions to ``out_path`` (directory-
-       partitioned by ``key_col`` so re-runs never rewrite done work);
-    3. commit per-partition lineage rows (count + checksum);
-    4. commit row_count=0 rows for ``expected_keys`` that produced no
-       data, so the planner knows they were processed, not lost.
+    1. filter out of ``df`` the keys already committed for (run_id,
+       stage) — the reference's skip-processed-shards logic;
+    2. summarize the surviving partitions (count + checksum) in ONE
+       collect, which gives the row total and the processed keys too;
+    3. write them to ``out_path`` (directory-partitioned by ``key_col``
+       so re-runs never rewrite done work);
+    4. commit their lineage rows together with row_count=0 rows for
+       ``expected_keys`` that produced no data (so the planner knows they
+       were processed, not lost) in ONE append.
 
     Returns {"skipped": n, "processed": n, "rows": n}.
     """
-    done = lineage.completed_keys(run_id, stage)
-    n_done = done.count()
-
-    todo = df.join(
-        done.withColumnRenamed("partition_key", key_col), on=key_col, how="left_anti"
-    )
+    done = {r["partition_key"] for r in lineage.completed_keys(run_id, stage).collect()}
+    todo = df
+    if done:
+        key = F.col(key_col)
+        # null keys never match a committed key (the anti-join semantics)
+        todo = df.filter(key.isNull() | ~key.cast("string").isin(sorted(done - {None})))
     # cache: summary + write must see the same data exactly once
     todo = todo.persist()
     try:
-        summaries = partition_summary(todo, key_col).persist()
-        n_rows = summaries.agg(F.sum("row_count")).collect()[0][0] or 0
-        processed_keys = [r["partition_key"] for r in summaries.select("partition_key").collect()]
-
+        summary = partition_summary(todo, key_col).collect()
+        n_rows = sum(r["row_count"] for r in summary)
+        processed = {r["partition_key"] for r in summary}
         if n_rows > 0:
             # dynamic partition overwrite, NOT append: if a previous attempt
             # crashed after writing files but before the lineage commit,
             # the retry must replace that partition's files, or the rows
             # would be duplicated. Committed partitions are never in `todo`
-            # (anti-joined above), so only retried partitions are touched.
+            # (filtered above), so only retried partitions are touched.
             (
                 todo.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(key_col)
                 .parquet(out_path, compression="snappy")
             )
-        lineage.commit(summaries, run_id, stage)
-        if expected_keys is not None:
-            missing = sorted(set(map(str, expected_keys)) - set(processed_keys))
-            # drop keys that a previous attempt already committed
-            prior = {r["partition_key"] for r in done.collect()} if n_done else set()
-            lineage.commit_empty([k for k in missing if k not in prior], run_id, stage)
-        return {"skipped": n_done, "processed": len(processed_keys), "rows": int(n_rows)}
+        # keys a previous attempt already committed are not re-marked
+        empty = sorted(set(map(str, expected_keys or ())) - processed - done)
+        lineage.commit(summary, empty, run_id, stage)
+        return {"skipped": len(done), "processed": len(processed), "rows": int(n_rows)}
     finally:
         todo.unpersist()
-        try:
-            summaries.unpersist()
-        except Exception:
-            pass
 
 
 def verify_against_lineage(spark: SparkSession, out_path: str, lineage: LineageLog,

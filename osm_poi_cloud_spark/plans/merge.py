@@ -11,16 +11,18 @@ appends per partition), so "merge" degenerates to:
   explicit parts (U1);
 * ``compact`` — rewrite small per-shard files into size-targeted files
   (the operational reason the reference merged at all);
-* ``merge_stats`` — the reference's merged-output stats row
+* ``merge_stats_cols`` — the reference's merged-output stats row
   (COUNT(*), COUNT(DISTINCT class), COUNT(DISTINCT shard_id),
-  ``merge.py:89-97``).
+  ``merge.py:89-97``), observed during the compaction write;
+  ``merge_stats`` evaluates the same columns over a stored table.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.fs as pafs
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -35,15 +37,24 @@ def union_shards(parts: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
-def merge_stats(pois: DataFrame) -> DataFrame:
+def merge_stats_cols() -> list[Column]:
     """COUNT(*), COUNT(DISTINCT class), COUNT(DISTINCT shard_id) — the
-    reference's merged-output stats (merge.py:89-97). At 10^12 rows use
-    ``approx_count_distinct`` instead; exact kept for fixture parity."""
-    return pois.agg(
+    reference's merged-output stats (merge.py:89-97) — as aggregate
+    columns that ``compact(observe=...)`` computes during its write.
+    ``DataFrame.observe`` rejects DISTINCT, so the distinct counts are
+    ``size(collect_set(..))``: equal, since both ignore nulls. At 10^12
+    rows use ``approx_count_distinct`` instead; exact kept for fixture
+    parity."""
+    return [
         F.count(F.lit(1)).alias("total"),
-        F.countDistinct("class").alias("classes"),
-        F.countDistinct("shard_id").alias("shards"),
-    )
+        F.size(F.collect_set("class")).alias("classes"),
+        F.size(F.collect_set("shard_id")).alias("shards"),
+    ]
+
+
+def merge_stats(pois: DataFrame) -> DataFrame:
+    """The ``merge_stats_cols`` row over a table already written."""
+    return pois.agg(*merge_stats_cols())
 
 
 def source_bytes(spark: SparkSession, df: DataFrame) -> int:
@@ -51,27 +62,49 @@ def source_bytes(spark: SparkSession, df: DataFrame) -> int:
     the input files and stat them through the Hadoop FileSystem API —
     no Spark job, no scan. (r1 used SUM(length(to_json(*))), a full
     extra pass that also overestimates snappy-parquet bytes several
-    fold — r1 verdict #1 / advice #4.)"""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    fs = None
-    for uri in df.inputFiles():
-        path = jvm.org.apache.hadoop.fs.Path(uri)
-        if fs is None:
-            fs = path.getFileSystem(conf)
-        total += fs.getFileStatus(path).getLen()
-    return total
+    fold — r1 verdict #1 / advice #4.)
+
+    The Hadoop API is reached through private handles (``spark._jvm``,
+    ``spark._jsc``). Where they are missing (Spark Connect) or raise, the
+    files are stat'ed from Python through pyarrow's filesystems; a file
+    neither can stat counts 0 bytes, so sizing never fails the merge."""
+    files = df.inputFiles()
+    try:
+        jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+        total = 0
+        fs = None
+        for uri in files:
+            path = jvm.org.apache.hadoop.fs.Path(uri)
+            if fs is None:
+                fs = path.getFileSystem(conf)
+            total += fs.getFileStatus(path).getLen()
+        return total
+    except Exception:
+        return sum(_file_size(uri) for uri in files)
+
+
+def _file_size(uri: str) -> int:
+    try:
+        fs, path = pafs.FileSystem.from_uri(uri)
+        return fs.get_file_info(path).size or 0
+    except (OSError, ValueError, NotImplementedError):  # scheme pyarrow cannot reach
+        return 0
 
 
 def compact(spark: SparkSession, in_path: str, out_path: str,
-            target_file_mb: int = 128, sort_cols: tuple[str, ...] = ("cell_l12",)) -> None:
+            target_file_mb: int = 128, sort_cols: tuple[str, ...] = ("cell_l12",),
+            observe: list[Column] | None = None) -> dict:
     """Rewrite the POI table into ~target-sized, cell-sorted files.
 
     Sorting within files by cell id keeps parquet min/max stats tight so
     bbox/cell queries prune row groups — the physical benefit the
     reference got from one big merged file, without the single-node
-    bottleneck."""
+    bottleneck.
+
+    ``observe``: aggregate columns (e.g. ``merge_stats_cols()``)
+    computed by the write itself and returned as a dict — no second
+    pass over the output. They sit above the range exchange, so the
+    partitioner's sampling job does not evaluate them."""
     df = spark.read.parquet(in_path)
     approx_bytes = source_bytes(spark, df)
     n_files = max(1, round(approx_bytes / (target_file_mb * 1024 * 1024)))
@@ -79,4 +112,8 @@ def compact(spark: SparkSession, in_path: str, out_path: str,
     out = df.repartitionByRange(n_files, *cols) if cols else df.repartition(n_files)
     if cols:
         out = out.sortWithinPartitions(*cols)
+    seen = Observation("compact")
+    if observe:
+        out = out.observe(seen, *observe)
     out.write.mode("overwrite").parquet(out_path, compression="snappy")
+    return seen.get if observe else {}

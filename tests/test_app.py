@@ -3,12 +3,14 @@ produces consistent artifacts."""
 
 import json
 import os
+import re
 
 from osm_poi_cloud_spark import app
+from osm_poi_cloud_spark.plans import merge as mg
 from osm_poi_cloud_spark.sources import pages as pg
 
 
-def test_full_app_run_and_resume(spark, tmp_path, monkeypatch):
+def test_full_app_run_and_resume(spark, tmp_path, monkeypatch, capsys):
     # the app builds its own session via get_spark(); reuse the test one
     monkeypatch.setattr(app, "get_spark", lambda *a, **k: spark)
 
@@ -27,6 +29,16 @@ def test_full_app_run_and_resume(spark, tmp_path, monkeypatch):
     assert pois.count() == merged.count() > 100
     tiles = spark.read.parquet(os.path.join(out, "tiles"))
     assert set(r["z"] for r in tiles.select("z").distinct().collect()) == set(range(2, 15))
+
+    # the counts the merge and tiles stages observe during their writes
+    # equal a recount of what they wrote
+    printed = capsys.readouterr().out
+    merge_line = re.search(r"^merge: ([\d,]+) POIs, (\d+) classes, (\d+) shards$", printed, re.M)
+    tiles_line = re.search(r"^tiles: ([\d,]+) tiles z2-z14;", printed, re.M)
+    want = mg.merge_stats(merged).collect()[0]
+    assert [int(g.replace(",", "")) for g in merge_line.groups()] == [
+        want["total"], want["classes"], want["shards"]]
+    assert int(tiles_line.group(1).replace(",", "")) == tiles.count()
 
     # every POI in exactly one shard, consistent with the manifest ids
     shard_ids = {f["properties"]["shard_id"] for f in manifest["features"]}

@@ -92,3 +92,39 @@ def test_retry_after_crash_between_write_and_commit_does_not_duplicate(spark, tm
     written = spark.read.parquet(out)
     assert written.count() == 30  # not 60
     assert written.select("row_id").distinct().count() == 30
+
+
+# Spark jobs of one run_stage_with_resume call at local[4], as measured:
+# the first call, and a resume call (which also reads the committed keys).
+JOBS_FIRST_CALL = 5
+JOBS_RESUME_CALL = 7
+
+
+def _lineage_files(path):
+    return sorted(p.name for p in path.glob("*.parquet"))
+
+
+def test_resume_write_job_budget_and_single_append(spark, tmp_path, count_jobs):
+    """One call = one summary collect, one data write, ONE lineage append
+    (data rows and _EMPTY rows together)."""
+    out = str(tmp_path / "out")
+    lineage_dir = tmp_path / "lineage"
+    log = ln.LineageLog(spark, str(lineage_dir))
+    r1, jobs1 = count_jobs(lambda: ln.run_stage_with_resume(
+        spark, _df(spark, [0, 1]), out, log, "run1", "process", "shard_id",
+        expected_keys=["s0", "s1", "s5"]))
+    assert r1 == {"skipped": 0, "processed": 2, "rows": 30}
+    assert jobs1 <= JOBS_FIRST_CALL, jobs1
+    assert len(_lineage_files(lineage_dir)) == 1
+    lin = log.read().toPandas().set_index("partition_key")["row_count"].to_dict()
+    assert lin == {"s0": 10, "s1": 20, "s5": 0}
+
+    r2, jobs2 = count_jobs(lambda: ln.run_stage_with_resume(
+        spark, _df(spark, [0, 1, 2, 3]), out, log, "run1", "process", "shard_id",
+        expected_keys=["s0", "s1", "s2", "s3", "s5", "s6"]))
+    assert r2 == {"skipped": 3, "processed": 2, "rows": 70}
+    assert jobs2 <= JOBS_RESUME_CALL, jobs2
+    assert len(_lineage_files(lineage_dir)) == 2
+    lin = log.read().toPandas()
+    assert sorted(lin["partition_key"]) == ["s0", "s1", "s2", "s3", "s5", "s6"]
+    assert spark.read.parquet(out).count() == 100

@@ -8,6 +8,7 @@ import sys
 import zlib
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -163,6 +164,26 @@ def test_hilbert_tile_ids():
     for d in range(63):
         (x1, y1), (x2, y2) = pos[base + d], pos[base + d + 1]
         assert abs(x1 - x2) + abs(y1 - y2) == 1
+
+
+def test_hilbert_tile_id_col_matches_reference(spark):
+    """The native tile id the streamed writer sorts on is bit-exact with
+    hilbert_tile_id: every tile at z0-z9, plus seeded random tiles and
+    the corner tiles (0 and n-1 on each axis) at z10-z20."""
+    tiles = [(z, x, y) for z in range(10) for x in range(1 << z) for y in range(1 << z)]
+    rng = np.random.default_rng(7)
+    for z in range(10, 21):
+        n = 1 << z
+        tiles += [(z, x, y) for x in (0, n - 1) for y in (0, n - 1)]
+        tiles += [(z, int(x), int(y)) for x, y in rng.integers(0, n, size=(200, 2))]
+    zs, xs, ys = zip(*tiles)
+    table = pa.table({
+        "z": pa.array(zs, pa.int32()), "x": pa.array(xs, pa.int64()), "y": pa.array(ys, pa.int64()),
+        "want": pa.array([mvt.hilbert_tile_id(*t) for t in tiles], pa.int64()),
+    })
+    got = spark.createDataFrame(table).withColumn("tid", mvt.hilbert_tile_id_col())
+    assert got.count() == len(tiles) == 349_525 + 11 * 204
+    assert got.filter(F.col("tid") != F.col("want")).limit(5).collect() == []
 
 
 def test_crc_checksum_matches_spark(spark, tiles_df):

@@ -144,6 +144,34 @@ def test_source_bytes_is_metadata_only(spark, tmp_path):
     assert mg.source_bytes(spark, df) == expected
 
 
+def test_source_bytes_falls_back_without_private_api(spark, tmp_path):
+    """Sizing reads the Hadoop FileSystem through ``spark._jvm`` /
+    ``spark._jsc``; sessions without them (Spark Connect shape), or whose
+    handles raise, get the same bytes stat'ed from Python, and the merge
+    still runs."""
+    src = str(tmp_path / "src")
+    spark.range(20_000).repartition(4).withColumn("s", F.md5(F.col("id").cast("string"))).write.parquet(src)
+    expected = sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src) if f.endswith(".parquet"))
+
+    class _NoJvm:
+        read = spark.read
+
+    class _RaisingJvm(_NoJvm):
+        @property
+        def _jvm(self):
+            raise RuntimeError("no JVM handle")
+
+        _jsc = spark._jsc
+
+    df = spark.read.parquet(src)
+    for session in (_NoJvm(), _RaisingJvm()):
+        assert mg.source_bytes(session, df) == expected
+        out = str(tmp_path / type(session).__name__)
+        assert mg.compact(session, src, out, sort_cols=()) == {}
+        assert len([f for f in os.listdir(out) if f.endswith(".parquet")]) == 1
+        assert spark.read.parquet(out).count() == 20_000
+
+
 def test_compact_file_count_tracks_real_bytes(spark, tmp_path):
     src = str(tmp_path / "src")
     # ~raw int64s compress small; write many small files

@@ -2,14 +2,19 @@
 actually runs (pushdown, broadcast, codegen, no stray Python stages).
 These guard the 100 TB properties that correctness tests can't see."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osm_poi_cloud_spark import app
+from osm_poi_cloud_spark.operators import mvt
 from osm_poi_cloud_spark.operators import quadtree as qt
 from osm_poi_cloud_spark.operators import spatial_join as sj
 from osm_poi_cloud_spark.operators import tiling as tl
+from osm_poi_cloud_spark.plans import lineage as ln
 from osm_poi_cloud_spark.plans import merge as mg
 from osm_poi_cloud_spark.plans import pipeline as pl
 from osm_poi_cloud_spark.plans import query_api as qa
@@ -118,6 +123,35 @@ def test_tile_pyramid_single_shuffle_for_cap(spark, pois_path):
     # window (z,x,y) and groupBy (z,x,y) share partitioning: exactly one
     # exchange in the whole pyramid plan
     assert plan.count("Exchange") == 1, plan
+
+
+def test_tile_table_one_range_exchange(spark, pois_path):
+    """stage_tiles' table: the (z, x, y) range exchange on the pyramid
+    rows is the ONLY exchange (the cap window and the tile group-by
+    reuse it), and the MVT encode is the one Python stage."""
+    plan = _plan(app.tile_table(spark.read.parquet(pois_path), 2, 14, 4096))
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(r"Exchange rangepartitioning\(z#\d+ ASC NULLS FIRST, x#\d+L ASC NULLS FIRST, "
+                     r"y#\d+L ASC NULLS FIRST", plan), plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_pmtiles_order_is_native(spark):
+    """The PMTiles Hilbert sort computes its tile id without Python."""
+    tiles = spark.range(64).select(F.lit(3).alias("z"), (F.col("id") % 8).alias("x"),
+                                   (F.col("id") / 8).cast("long").alias("y"), F.lit(b"t").alias("mvt"))
+    plan = _plan(mvt._hilbert_sorted(tiles))
+    assert "EvalPython" not in plan and "rangepartitioning(tid" in plan, plan
+
+
+def test_driver_tables_launch_no_job(spark, tmp_path, count_jobs):
+    """The shard manifest and a not-yet-written lineage table are
+    driver-built local tables: reading them back runs no Spark job."""
+    shards = [qt.Shard(1, 0, 0, 5), qt.Shard(2, 3, 1, 7)]
+    rows, jobs = count_jobs(lambda: qt.shards_df(spark, shards).collect())
+    assert jobs == 0 and [r["shard_id"] for r in rows] == ["1-0-0", "2-3-1"]
+    rows, jobs = count_jobs(lambda: ln.LineageLog(spark, str(tmp_path / "lineage")).read().collect())
+    assert jobs == 0 and rows == []
 
 
 def test_union_by_name_tolerates_missing_columns(spark):
