@@ -88,9 +88,11 @@ def main() -> None:
                          holes=(np.array([[-74.3, 40.4], [-73.7, 40.4], [-74.0, 41.0]]),))],
              cover_zoom=6))),
         ("distributed PIP (polygon table, cover join + cogroup refine)",
-         "For polygon sets too large to broadcast: the tile-cover join carries no "
-         "geometry; `FlatMapCoGroupsInPandas` attaches each polygon's rings once "
-         "per group — the only Python in the plan.",
+         "For polygon sets too large to broadcast: the cover is built inside each "
+         "polygon's row (one `Generate`, no aggregate), so the only `Exchange` nodes "
+         "are the two cogroup sides; the tile-cover join carries no geometry; "
+         "`FlatMapCoGroupsInPandas` attaches each polygon's rings once per group — "
+         "the only Python in the plan.",
          fmt(sj.point_in_polygon_join_distributed(
              spark, pois,
              sj.polygons_df(spark, [sj.Polygon("a", np.array([[-75.0, 40.0], [-73.0, 40.0], [-74.0, 41.5]]))]),

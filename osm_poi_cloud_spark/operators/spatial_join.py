@@ -27,10 +27,12 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import local_table
 from ..functions import tile_math as tm
 
 
@@ -147,6 +149,12 @@ def _close_ring(r) -> np.ndarray:
     if not np.array_equal(r[0], r[-1]):
         r = np.vstack([r, r[:1]])
     return r
+
+
+def _arrow_rings(rings) -> list[np.ndarray]:
+    """Closed (N, 2) rings from one Arrow ``rings`` value: each ring comes
+    as an object ndarray of point arrays, so go through list() to stack."""
+    return [_close_ring(np.asarray(list(r), dtype=np.float64)) for r in rings]
 
 
 @dataclass
@@ -462,9 +470,33 @@ def polygons_df(spark, polys: list[Polygon]) -> DataFrame:
     """Polygon table: (polygon_id, rings array<array<array<double>>>) —
     the distributed-side representation for ``point_in_polygon_join_distributed``.
     At real scale this table comes straight from storage; this helper is
-    for tests/small sets."""
-    rows = [(p.polygon_id, [r.tolist() for r in p.rings]) for p in polys]
-    return spark.createDataFrame(rows, "polygon_id string, rings array<array<array<double>>>")
+    for tests/small sets. It is an Arrow local relation, not a pickled
+    RDD: scans run no Python worker and the planner sees a size, so
+    joins on it plan as broadcasts up front, as on a parquet table."""
+    return local_table(spark, pa.table({
+        "polygon_id": pa.array([p.polygon_id for p in polys], pa.string()),
+        "rings": pa.array([[r.tolist() for r in p.rings] for p in polys],
+                          pa.list_(pa.list_(pa.list_(pa.float64())))),
+    }))
+
+
+def _bbox_tiles(w: str, e: str, s: str, n: str, zoom: int) -> str:
+    """SQL ``array<struct<tile_x, tile_y>>`` of a bbox's tiles (shared-SQL tile formulas)."""
+    return (f"flatten(transform(sequence({tm.sql_tile_x(w, zoom)}, {tm.sql_tile_x(e, zoom)}), "
+            f"x -> transform(sequence({tm.sql_tile_y(n, zoom)}, {tm.sql_tile_y(s, zoom)}), "
+            "y -> named_struct('tile_x', x, 'tile_y', y))))")
+
+
+def _ring_tile_cover(polygons: DataFrame, zoom: int) -> DataFrame:
+    """(polygon_id, tile_x, tile_y): the distinct tiles of every ring's bbox,
+    built inside each polygon's row and inlined once — no exchange, no
+    Python. Holes lie inside shells: the union equals the shell cover."""
+    agg = "aggregate(r, CAST({} AS DOUBLE), (acc, p) -> {}(acc, p[{}]))".format
+    boxes = (f"transform(rings, r -> named_struct('w', {agg('180.0', 'least', 0)}, "
+             f"'e', {agg('-180.0', 'greatest', 0)}, 's', {agg('90.0', 'least', 1)}, "
+             f"'n', {agg('-90.0', 'greatest', 1)}))")
+    tiles = f"flatten(transform({boxes}, b -> {_bbox_tiles('b.w', 'b.e', 'b.s', 'b.n', zoom)}))"
+    return polygons.select("polygon_id", F.expr(f"inline(array_distinct({tiles}))"))
 
 
 def point_in_polygon_join_distributed(
@@ -482,63 +514,32 @@ def point_in_polygon_join_distributed(
     sized sets (the north rule's broadcast R-tree), wrong for millions
     of polygons. Here everything stays distributed:
 
-    * polygon side: per-ring bbox -> covered (tile_x, tile_y) rows via
-      one JVM-side sequence/explode (no Python, no driver pass) — the
-      cover carries NO geometry;
-    * point side: native tile key; shuffle hash join on the tile key;
+    * polygon side: each polygon's cover (the distinct tiles of its ring
+      bboxes) is built inside its own row and inlined once — no Python,
+      no driver pass, no exchange; the cover carries NO geometry;
+    * point side: native tile key; hash join on the tile key;
     * refine: ``cogroup(polygon_id).applyInPandas`` — each polygon's
       rings cross the wire ONCE per group, never once per candidate
       row, and the ray cast is vectorized over the group's points.
 
-    Rows with empty ``rings`` are ignored. A mega-polygon whose
-    candidates overflow one task should be pre-split into longitude
-    bands with ``split_ring_into_lon_bands`` (exact; one sub-polygon
+    ``polygon_id`` is a key: the refine tests a group's points against
+    the group's first ``rings`` row. Rows with empty ``rings`` are
+    ignored. A mega-polygon whose candidates overflow one task should be
+    pre-split with ``split_ring_into_lon_bands`` (exact; one sub-polygon
     per band -> bounded group size), re-uniting ids downstream.
     Output matches the broadcast variant exactly (same even-odd
     convention)."""
     polygons = polygons.filter(F.size("rings") > 0)
-    shells = polygons.select(
-        "polygon_id", "rings",
-        F.expr("transform(rings, r -> aggregate(r, CAST(180.0 AS DOUBLE), (acc, p) -> least(acc, p[0])))").alias("_w"),
-        F.expr("transform(rings, r -> aggregate(r, CAST(-180.0 AS DOUBLE), (acc, p) -> greatest(acc, p[0])))").alias("_e"),
-        F.expr("transform(rings, r -> aggregate(r, CAST(90.0 AS DOUBLE), (acc, p) -> least(acc, p[1])))").alias("_s"),
-        F.expr("transform(rings, r -> aggregate(r, CAST(-90.0 AS DOUBLE), (acc, p) -> greatest(acc, p[1])))").alias("_n"),
-    )
-    # one cover row per (ring bbox tile); holes lie inside shells so the
-    # union over all rings equals the shell cover (plus negligible rows)
-    ring_idx = F.explode(F.sequence(F.lit(0), F.size("rings") - 1)).alias("_ri")
-    shells = shells.select("polygon_id", "rings", ring_idx, "_w", "_e", "_s", "_n").select(
-        "polygon_id", "rings",
-        F.element_at("_w", F.col("_ri") + 1).alias("_wv"),
-        F.element_at("_e", F.col("_ri") + 1).alias("_ev"),
-        F.element_at("_s", F.col("_ri") + 1).alias("_sv"),
-        F.element_at("_n", F.col("_ri") + 1).alias("_nv"),
-    )
-    x0, y1 = tm.tile_cols("_wv", "_nv", cover_zoom)
-    x1_, y0 = tm.tile_cols("_ev", "_sv", cover_zoom)
-    cover = (
-        shells.withColumn("_x0", x0).withColumn("_x1", x1_)
-        .withColumn("_y0", y1).withColumn("_y1", y0)
-        .withColumn("tile_x", F.explode(F.sequence("_x0", "_x1")))
-        .withColumn("tile_y", F.explode(F.sequence("_y0", "_y1")))
-        .select("polygon_id", "tile_x", "tile_y")
-        .dropDuplicates(["polygon_id", "tile_x", "tile_y"])
-    )
-
     pts = with_tile_key(points, cover_zoom, lon, lat)
-    cand = pts.join(cover, on=["tile_x", "tile_y"], how="inner").drop("tile_x", "tile_y", "tile_z")
+    cand = (pts.join(_ring_tile_cover(polygons, cover_zoom), on=["tile_x", "tile_y"], how="inner")
+            .drop("tile_x", "tile_y", "tile_z"))
     out_schema = cand.schema
 
     def refine_group(pts_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pts_pdf) or not len(poly_pdf):
             return pts_pdf.iloc[0:0]
-        # Arrow hands each ring over as an object-dtype ndarray of point
-        # arrays; go through list() so numpy stacks to (N, 2)
-        rings = [_close_ring(np.asarray(list(r), dtype=np.float64))
-                 for r in poly_pdf["rings"].iloc[0]]
-        inside = point_in_rings(
-            pts_pdf[lon].to_numpy(np.float64), pts_pdf[lat].to_numpy(np.float64), rings
-        )
+        inside = point_in_rings(pts_pdf[lon].to_numpy(np.float64), pts_pdf[lat].to_numpy(np.float64),
+                                _arrow_rings(poly_pdf["rings"].iloc[0]))
         return pts_pdf[inside]
 
     # fresh attribute ids on the rings side: cand already descends from
@@ -616,10 +617,9 @@ def rings_intersect(rings_a, rings_b) -> bool:
 
 
 def _poly_tile_candidates(polys: DataFrame, zoom: int, id_out: str) -> DataFrame:
-    """(id, tile_x, tile_y, bbox) — every tile intersecting the
-    polygon's bbox, 100% native: bbox from array HOFs over the rings
-    column, tile corners via the shared-SQL tile formulas, tiles by a
-    2-level sequence explode."""
+    """(id, _w, _e, _s, _n, tile_x, tile_y) — every tile intersecting
+    the polygon's bbox, 100% native: bbox from array HOFs over the
+    rings column, its tiles inlined from ``_bbox_tiles``."""
     pts = F.flatten(F.col("rings"))
     lons = F.transform(pts, lambda p: F.element_at(p, 1))
     lats = F.transform(pts, lambda p: F.element_at(p, 2))
@@ -628,14 +628,15 @@ def _poly_tile_candidates(polys: DataFrame, zoom: int, id_out: str) -> DataFrame
         F.array_min(lons).alias("_w"), F.array_max(lons).alias("_e"),
         F.array_min(lats).alias("_s"), F.array_max(lats).alias("_n"),
     )
-    xs = base.select(
-        "*",
-        F.explode(F.sequence(F.expr(tm.sql_tile_x("_w", zoom)),
-                             F.expr(tm.sql_tile_x("_e", zoom)))).alias("tile_x"))
-    return xs.select(
-        "*",
-        F.explode(F.sequence(F.expr(tm.sql_tile_y("_n", zoom)),
-                             F.expr(tm.sql_tile_y("_s", zoom)))).alias("tile_y"))
+    return base.select("*", F.expr(f"inline({_bbox_tiles('_w', '_e', '_s', '_n', zoom)})"))
+
+
+def _refine_width(spark) -> int:
+    """Default parallelism; the shuffle width where no JVM context exists (Spark Connect)."""
+    try:
+        return int(spark.sparkContext.defaultParallelism)
+    except Exception:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def polygon_intersection_join(left: DataFrame, right: DataFrame,
@@ -652,7 +653,7 @@ def polygon_intersection_join(left: DataFrame, right: DataFrame,
     2. candidates = hash join on (tile_x, tile_y) + a native bbox
        overlap filter, dedup'd to distinct id pairs — no geometry
        bytes travel through the tile join;
-    3. ring payloads join back (two hash joins) and the exact
+    3. ring payloads join back (two joins) and the exact
        ``rings_intersect`` test runs Arrow-batched on candidate pairs
        only.
 
@@ -660,29 +661,26 @@ def polygon_intersection_join(left: DataFrame, right: DataFrame,
     change the result (exact refine; asserted in tests)."""
     ca = _poly_tile_candidates(left, cover_zoom, "_ia")
     cb = _poly_tile_candidates(right, cover_zoom, "_ib")
+    # one exchange before the refine, at an explicit width: pair rows
+    # are BYTES-small but the exact test is CPU-bound Python, and AQE's
+    # byte-based coalescing would funnel it into one task (measured:
+    # 1-task refine at 166k pairs). A numbered hash repartition is exempt
+    # from coalescing and already satisfies the distinct's distribution.
     cand = (
         ca.join(cb, ["tile_x", "tile_y"])
         .filter((ca["_w"] <= cb["_e"]) & (cb["_w"] <= ca["_e"])
                 & (ca["_s"] <= cb["_n"]) & (cb["_s"] <= ca["_n"]))
-        .select("_ia", "_ib").distinct()
+        .select("_ia", "_ib")
+        .repartition(_refine_width(ca.sparkSession), "_ia", "_ib").distinct()
     )
     la = left.select(F.col("polygon_id").alias("_ia"), F.col("rings").alias("_ra"))
     rb = right.select(F.col("polygon_id").alias("_ib"), F.col("rings").alias("_rb"))
-    # explicit width before the refine: candidate-pair rows are BYTES-
-    # small but the exact test is CPU-bound Python — AQE's byte-based
-    # coalescing would funnel the whole refine into one task (measured:
-    # 1-task refine at 166k pairs). A numbered repartition is exempt
-    # from AQE coalescing and spreads pairs round-robin.
-    width = cand.sparkSession.sparkContext.defaultParallelism
-    paired = cand.repartition(width).join(la, "_ia").join(rb, "_ib")
+    paired = cand.join(la, "_ia").join(rb, "_ib")
 
     @F.pandas_udf(T.BooleanType())
     def hit(ra: pd.Series, rb_s: pd.Series) -> pd.Series:
-        ka = [[_close_ring(np.asarray(list(r), dtype=np.float64)) for r in rings]
-              for rings in ra]
-        kb = [[_close_ring(np.asarray(list(r), dtype=np.float64)) for r in rings]
-              for rings in rb_s]
-        return pd.Series(batch_rings_intersect(ka, kb))
+        return pd.Series(batch_rings_intersect([_arrow_rings(r) for r in ra],
+                                               [_arrow_rings(r) for r in rb_s]))
 
     return (
         paired.withColumn("_hit", hit(F.col("_ra"), F.col("_rb")))

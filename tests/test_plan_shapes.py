@@ -109,6 +109,49 @@ def test_distributed_pip_cogroup_refine(spark, pois_path):
     assert tile_join_lines and all("rings" not in l for l in tile_join_lines)
 
 
+def _exchanges(lines) -> list[str]:
+    """Shuffle exchanges only (``BroadcastExchange`` excluded)."""
+    return [l for l in lines if re.search(r"\bExchange ", l)]
+
+
+def test_distributed_pip_cover_is_shuffle_free(spark, pois_path):
+    """The distributed-PIP cover is built inside each polygon's row: no
+    aggregate or exchange deduplicates it, so the cogroup's two sides
+    are the plan's only shuffles, and the polygon table is a sized
+    local relation, not an RDD scan."""
+    polys = sj.polygons_df(spark, [
+        sj.Polygon("a", np.array([[-10.0, -10.0], [10.0, -10.0], [0.0, 15.0]]),
+                   holes=(np.array([[-2.0, -2.0], [2.0, -2.0], [0.0, 2.0]]),)),
+        sj.Polygon("b", np.array([[20.0, 0.0], [30.0, 0.0], [25.0, 5.0]]),
+                   shells=(np.array([[-30.0, 0.0], [-20.0, 0.0], [-25.0, 5.0]]),)),
+    ])
+    pois = spark.read.parquet(pois_path)
+    plan = _plan(sj.point_in_polygon_join_distributed(spark, pois, polys, cover_zoom=5))
+    assert "ExistingRDD" not in plan and "HashAggregate" not in plan, plan
+    ex = _exchanges(plan.splitlines())
+    assert len(ex) == 2, plan
+    assert "hashpartitioning(polygon_id#" in ex[0] and "hashpartitioning(_pid#" in ex[1], plan
+
+
+def test_polygon_join_one_exchange_before_refine(spark):
+    """Between the polygon-pair tile join and the exact refine there is
+    ONE exchange: the numbered pair repartition, which also serves the
+    pair distinct; the ring join-backs plan as broadcasts."""
+    def tri(pid, cx):
+        return sj.Polygon(pid, np.array([[cx, 0.0], [cx + 8.0, 0.0], [cx + 4.0, 6.0]]))
+
+    left = sj.polygons_df(spark, [tri("a1", 0.0), tri("a2", 20.0)])
+    right = sj.polygons_df(spark, [tri("b1", 3.0), tri("b2", 40.0)])
+    lines = _plan(sj.polygon_intersection_join(left, right)).splitlines()
+    plan = "\n".join(lines)
+    refine = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
+    tile_join = next(i for i, l in enumerate(lines) if "Join" in l and "tile_x" in l)
+    ex = _exchanges(lines[refine:tile_join])
+    assert len(ex) == 1 and re.search(r"hashpartitioning\(_ia#\d+, _ib#\d+, \d+\), REPARTITION_BY_NUM",
+                                      ex[0]), plan
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_topk_uses_take_ordered(spark, pois_path):
     stored = spark.read.parquet(pois_path)
     top = qa.class_histogram(stored).limit(10)

@@ -315,6 +315,86 @@ def test_pip_distributed_matches_broadcast(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_polygons_df_local_table_parity(spark, count_jobs):
+    """polygons_df keeps the DDL schema and every ring's values (holes,
+    extra shells, open rings returned closed), also for an empty list,
+    and is a local relation: no RDD scan, no job to read it back."""
+    polys = [
+        sj.Polygon("donut", np.array([[0, 0], [10, 0], [5, 9]]),
+                   holes=(np.array([[4.0, 2.0], [6.0, 2.0], [5.0, 4.0]]),)),
+        sj.Polygon("twin", np.array([[-1.5, -1.5], [-0.5, -1.5], [-1.0, -0.25], [-1.5, -1.5]]),
+                   shells=(np.array([[20.25, 1.0], [21.0, 1.0], [20.5, 2.125]]),)),
+    ]
+    ddl = spark.createDataFrame([], "polygon_id string, rings array<array<array<double>>>").schema
+    df = sj.polygons_df(spark, polys)
+    assert df.schema == ddl
+    rows, jobs = count_jobs(df.collect)
+    assert jobs == 0
+    got = {r["polygon_id"]: r["rings"] for r in rows}
+    assert list(got) == ["donut", "twin"]
+    for p in polys:
+        assert len(got[p.polygon_id]) == len(p.rings) == 2
+        for ring, exp in zip(got[p.polygon_id], p.rings):
+            ring = np.asarray(ring)
+            assert np.array_equal(ring, exp) and np.array_equal(ring[0], ring[-1])
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+    empty = sj.polygons_df(spark, [])
+    assert empty.schema == ddl and empty.collect() == []
+
+
+def test_ring_tile_cover_matches_per_ring_bbox_reference(spark):
+    """The in-row distributed-PIP cover is exactly the set of tiles of
+    every ring's bbox (shells, holes, multipolygon parts, antimeridian
+    pieces, vertices past the Mercator clamp and at +-180), once each."""
+    rng = np.random.RandomState(23)
+
+    def star(cx, cy, r):
+        n = rng.randint(4, 10)
+        ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+        rad = rng.uniform(0.3, 1.0, n) * r
+        return np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1)
+
+    polys = []
+    for i in range(12):
+        cx, cy = rng.uniform(-170, 170), rng.uniform(-78, 78)
+        shell = star(cx, cy, 6)
+        if i % 3 == 0:
+            polys.append(sj.Polygon(f"d{i}", shell, holes=(star(cx, cy, 1.5),)))
+        elif i % 3 == 1:
+            polys.append(sj.Polygon(f"m{i}", shell, shells=(star(-cx, -cy, 4),)))
+        else:
+            polys.append(sj.Polygon(f"s{i}", shell))
+    polys.append(sj.polygon_from_unwrapped(
+        "am", [[170.0, -10.0], [195.0, -12.0], [190.0, 15.0], [172.0, 12.0]],
+        holes=[[[176.0, -2.0], [186.0, -3.0], [182.0, 5.0]]]))
+    polys.append(sj.Polygon("polar", np.array([[170.0, 80.0], [180.0, 80.0], [180.0, 89.5], [170.0, 89.5]]),
+                            shells=(np.array([[-180.0, -89.9], [-175.0, -89.9], [-175.0, -85.5],
+                                              [-180.0, -85.5]]),)))
+    assert len(polys[-2].rings) == 4  # two shell pieces, two hole pieces
+    table = sj.polygons_df(spark, polys)
+    for zoom in (0, 5, 7, 10):
+        exp = set()
+        for p in polys:
+            for r in p.rings:
+                x0, y0 = tm.lon_lat_to_tile(r[:, 0].min(), r[:, 1].max(), zoom)
+                x1, y1 = tm.lon_lat_to_tile(r[:, 0].max(), r[:, 1].min(), zoom)
+                exp |= {(p.polygon_id, x, y) for x in range(int(x0), int(x1) + 1)
+                        for y in range(int(y0), int(y1) + 1)}
+        rows = [tuple(r) for r in sj._ring_tile_cover(table, zoom).collect()]
+        assert len(rows) == len(set(rows)) and set(rows) == exp, zoom
+
+
+def test_refine_width_falls_back_without_jvm_context(spark):
+    """The polygon-join refine width reads ``sparkContext``; a session
+    without one (Spark Connect shape) gets the shuffle width instead of
+    an error."""
+    class _NoContextSession:
+        conf = spark.conf
+
+    assert sj._refine_width(spark) == spark.sparkContext.defaultParallelism
+    assert sj._refine_width(_NoContextSession()) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def test_assign_to_shards_disjoint_and_total(spark):
     """Every finite point lands in exactly one quadtree leaf."""
     rng = np.random.RandomState(5)
